@@ -12,25 +12,39 @@ Reference parity (citations into /root/reference):
 Scale design
 ------------
 * Data and delete files are written by Spark executors; the driver only
-  touches file-level metadata (paths + footer row counts), like an
-  Iceberg catalog commit.
-* The MoR scan is declarative: data ⟕ anti-join(position deletes on
-  ``(_metadata.file_path, _metadata.row_index)``) ⟕ anti-join(equality
-  deletes on key columns, restricted by sequence number).  Delete sides
-  are usually ≪ data and get broadcast by Catalyst/AQE automatically, so
-  the read path adds no extra shuffle of the data side.
-* Iceberg sequence-number semantics are honored: an equality delete
-  applies only to rows from data files committed strictly before it.
+  touches file-level metadata (paths + one footer read per file for row
+  count, column bounds and null counts), like an Iceberg catalog commit.
+* Deletes are scoped at planning time, as Iceberg's scan planning does:
+  a position-delete file applies to the data files inside its
+  ``file_path`` bounds; an equality-delete file applies to data files
+  with a strictly older sequence number whose key bounds can overlap its
+  own, or whose key nulls can meet its nulls (keys match null-safely).
+  A ``scan(where=...)`` also leaves out equality deletes whose key
+  bounds miss the range.  Data files no delete applies to are a plain
+  parquet scan with no join.  Delete files committed without bounds
+  apply to every data file.
+* A position-delete file that names one data file and holds few runs of
+  consecutive positions records them at commit (one driver read of its
+  ``pos`` column, like a deletion vector); the scan applies them as a
+  ``_metadata.row_index`` filter, with no join.
+* The rest of the MoR scan is declarative: data ⟕ anti-join(other
+  position deletes on ``(_metadata.file_path, _metadata.row_index)``) ⟕
+  anti-join(equality deletes on key columns, restricted by sequence
+  number).  Delete sides are usually ≪ data and get broadcast by
+  Catalyst/AQE automatically, so the read path adds no extra shuffle of
+  the data side.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,35 +108,92 @@ class TableSchema:
         )
 
 
-def _canon_path(p: str) -> str:
-    """Canonical file identity shared by metadata and ``_metadata.file_path``
-    (Spark reports ``file:///abs/path``; we store plain ``/abs/path``)."""
-    if p.startswith("file://"):
-        p = p[len("file://") :]
-    return p
+# a ``file:`` / ``file://`` scheme prefix, as Spark reports local paths
+_FILE_SCHEME = "^file:(//)?"
 
 
-def _footer_row_count(path: str) -> int:
-    import pyarrow.parquet as pq
+def _file_id(p: str) -> str:
+    """A file's identity as metadata entries and position deletes hold
+    it: absolute and normalized, with no ``file:`` scheme and no
+    percent-encoding (``_file_id_col`` gives the same form of
+    ``_metadata.file_path``)."""
+    return os.path.abspath(re.sub(_FILE_SCHEME, "", p))
 
-    return pq.ParquetFile(path).metadata.num_rows
+
+def _file_id_col(uri):
+    """``_file_id`` of the URI Spark reports in ``_metadata.file_path``:
+    it percent-encodes what a URI path may not hold (a space reads back
+    as ``%20``, ``%`` as ``%25``) and leaves ``+`` literal, which
+    ``url_decode`` would turn into a space, so ``+`` is escaped first."""
+    return F.url_decode(
+        F.replace(F.regexp_replace(uri, _FILE_SCHEME, ""), F.lit("+"), F.lit("%2B"))
+    )
 
 
-def _data_file_entry(path: str) -> dict:
-    """Manifest entry for a committed data file — record count and
-    per-column stats from ONE footer read (review r7: the commit sites
-    called _footer_row_count + _footer_stats back to back, constructing
-    two ParquetFile objects and doubling the driver-side metadata pass
-    on many-file commits)."""
+def _file_entry(path: str, kind: str) -> dict:
+    """Manifest entry for a committed file: record count, per-column
+    ``[min, max]`` bounds (``stats``) and ``null_counts``, all from ONE
+    footer read.  On data files the bounds drive ``scan(where=...)``
+    pruning; on delete files they scope each delete to the data files it
+    can match (``_pos_delete_may_apply`` / ``_eq_delete_may_apply``).
+    A position-delete file that names one data file may also carry its
+    positions as runs (``pos_runs``, see ``_pos_runs``)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    return {
+    null_counts: dict[str, int] = {}
+    entry = {
         "path": path,
-        "kind": "data",
+        "kind": kind,
         "record_count": md.num_rows,
-        "stats": _stats_of(md),
+        "stats": _stats_of(md, null_counts),
+        "null_counts": null_counts,
     }
+    if kind == "pos-delete":
+        runs = _pos_runs(entry)
+        if runs is not None:
+            entry["pos_runs"] = runs
+    return entry
+
+
+# a position-delete file is kept as runs when it has at most this many
+# rows (its ``pos`` column is read once, at commit) and this many runs;
+# a scan whose files hold more runs than that in all joins them instead
+_POS_RUNS_MAX_ROWS = 1 << 22
+_POS_RUNS_MAX = 64
+
+
+def _pos_runs(entry: dict) -> dict | None:
+    """``{"data_file": path, "runs": [[lo, hi], ...]}`` for a
+    position-delete file that names ONE data file (its ``file_path``
+    bounds are equal and no path is null): its positions as sorted,
+    inclusive runs of consecutive row indexes.  The scan applies them as
+    a ``row_index`` filter, with no anti-join (the metadata analogue of
+    Iceberg's deletion vectors).  None when the file names several data
+    files, has too many rows or runs, or a null position: the scan then
+    anti-joins it."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    bounds = entry["stats"].get("file_path")
+    if (
+        bounds is None
+        or bounds[0] != bounds[1]
+        or entry["null_counts"].get("file_path", 1) > 0
+        or entry["record_count"] > _POS_RUNS_MAX_ROWS
+    ):
+        return None
+    col = pq.read_table(entry["path"], columns=["pos"]).column("pos")
+    if col.null_count:
+        return None
+    pos = np.unique(col.to_numpy())
+    breaks = np.flatnonzero(np.diff(pos) != 1)
+    if len(breaks) >= _POS_RUNS_MAX:
+        return None
+    lo = pos[np.concatenate(([0], breaks + 1))]
+    hi = pos[np.concatenate((breaks, [len(pos) - 1]))]
+    runs = [[int(a), int(b)] for a, b in zip(lo, hi)]
+    return {"data_file": bounds[0], "runs": runs}
 
 
 def _hive_pval(v) -> str | None:
@@ -154,23 +225,32 @@ def _hive_pval(v) -> str | None:
     return str(v)
 
 
-def _stats_of(md) -> dict[str, list]:
-    """Per-column [min, max] file bounds from the parquet footer.
+def _stats_of(md, null_counts: dict[str, int] | None = None) -> dict[str, list]:
+    """Per-column [min, max] file bounds from the parquet footer; when
+    ``null_counts`` is given, the same walk fills it with per-column
+    null counts.
 
     A column whose stats are missing or unusable in ANY row group is
     dropped from the result entirely (review r10): keeping the bounds of
     only the stats-bearing groups under-covers the file — a row in the
     stats-less group can lie outside the recorded range, and
     ``_stats_overlap`` would then prune a file that contains matching
-    rows.  No entry ⇒ "unknown" ⇒ the scan keeps the file."""
+    rows.  No entry ⇒ "unknown" ⇒ the scan keeps the file.  Null counts
+    follow the same rule (unknown ⇒ may hold nulls)."""
     stats: dict[str, list] = {}
     invalid: set[str] = set()
+    no_count: set[str] = set()
     for rg in range(md.num_row_groups):
         row = md.row_group(rg)
         for ci in range(row.num_columns):
             col = row.column(ci)
             name = col.path_in_schema
             st = col.statistics
+            if null_counts is not None:
+                if st is None or not st.has_null_count:
+                    no_count.add(name)
+                else:
+                    null_counts[name] = null_counts.get(name, 0) + st.null_count
             if st is None or not st.has_min_max:
                 invalid.add(name)
                 continue
@@ -187,6 +267,8 @@ def _stats_of(md) -> dict[str, list]:
                 stats[name] = [mn, mx]
     for name in invalid:
         stats.pop(name, None)
+    for name in no_count:
+        null_counts.pop(name, None)
     return stats
 
 
@@ -200,6 +282,56 @@ def _stats_overlap(stats: dict | None, where: dict[str, tuple]) -> bool:
             continue
         mn, mx = stats[col]
         if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+            return False
+    return True
+
+
+def _eq_delete_in_where(eq_file: dict, key_cols: list[str], where: dict | None) -> bool:
+    """May equality-delete file ``eq_file`` remove a row that the scan's
+    ``where`` keeps?  A surviving row holds a non-null value inside the
+    range on every ``where`` column, so a delete whose bounds on such a
+    key column lie outside that range can match no surviving row (a null
+    delete key matches only null data keys, which the range drops)."""
+    stats = eq_file.get("stats") or {}
+    return _stats_overlap(
+        {c: b for c, b in stats.items() if c in key_cols}, where or {}
+    )
+
+
+def _pos_delete_may_apply(data_id: str, pos_file: dict) -> bool:
+    """May position-delete file ``pos_file`` name a row of the data file
+    whose ``_file_id`` is ``data_id``?  The one data file its runs name,
+    else its ``file_path`` bounds decide; a delete file committed without
+    either may name any file."""
+    runs = pos_file.get("pos_runs")
+    if runs is not None:
+        return runs["data_file"] == data_id
+    bounds = (pos_file.get("stats") or {}).get("file_path")
+    return bounds is None or bounds[0] <= data_id <= bounds[1]
+
+
+def _may_hold_null(entry: dict, col: str) -> bool:
+    return (entry.get("null_counts") or {}).get(col, 1) > 0
+
+
+def _eq_delete_may_apply(data: dict, eq_file: dict, key_cols: list[str]) -> bool:
+    """May equality-delete file ``eq_file`` remove a row of data file
+    ``data``?  Only data with a strictly older sequence number qualifies,
+    and a row must match on EVERY key column, so one column that cannot
+    match rules the file out.  Keys match null-safely: a column whose
+    nulls may meet on both sides can match whatever its bounds; otherwise
+    disjoint non-null bounds rule it out.  Missing bounds or null counts
+    (files committed without delete stats) never rule out; nor does a
+    NaN bound (Spark's writer records NaN as a float column's max, and
+    every comparison with NaN is false), so NaN keys stay in scope."""
+    if data["sequence_number"] >= eq_file["sequence_number"]:
+        return False
+    for c in key_cols:
+        if _may_hold_null(data, c) and _may_hold_null(eq_file, c):
+            continue
+        a = (data.get("stats") or {}).get(c)
+        b = (eq_file.get("stats") or {}).get(c)
+        if a is not None and b is not None and (a[1] < b[0] or b[1] < a[0]):
             return False
     return True
 
@@ -297,7 +429,7 @@ class MoRTable:
         meta: dict | None = None,
     ) -> None:
         self.spark = spark
-        self.path = Path(path)
+        self.path = Path(os.path.abspath(path))
         # ``meta`` is a caller-supplied result of ``io.load()`` it JUST
         # performed (e.g. RestCatalog.load_table's existence probe) —
         # reusing it avoids a second metadata fetch; the io's CAS basis
@@ -681,7 +813,7 @@ class MoRTable:
         files = []
         for path in self._write_files(df, self.path / "data", "data", single_file):
             files.append(
-                _data_file_entry(path)
+                _file_entry(path, "data")
             )
         return self._commit("append", files, **extra)
 
@@ -747,7 +879,7 @@ class MoRTable:
             shutil.move(str(part), str(final))
             files.append(
                 {
-                    **_data_file_entry(str(final)),
+                    **_file_entry(str(final), "data"),
                     "spec_id": spec["spec_id"],
                     "partition": pvals,
                 }
@@ -800,7 +932,7 @@ class MoRTable:
                 "layouts; use append() on a partitioned table"
             )
         files = [
-            _data_file_entry(path)
+            _file_entry(path, "data")
             for path in self._write_batches_one_job(dfs, self.path / "data", "data")
         ]
         return self._commit("append", files)
@@ -814,7 +946,7 @@ class MoRTable:
         """
         assert set(df.columns) == set(POS_DELETE_COLS), df.columns
         return df.select(
-            F.regexp_replace("file_path", "^file:(//)?", "").alias("file_path"),
+            F.regexp_replace("file_path", _FILE_SCHEME, "").alias("file_path"),
             F.col("pos").cast("long").alias("pos"),
         ).sortWithinPartitions("file_path", "pos")
 
@@ -835,10 +967,7 @@ class MoRTable:
             paths = self._write_files(
                 self._normalize_pos_deletes(df), dest, "pos-delete", single_file
             )
-        files = [
-            {"path": p, "kind": "pos-delete", "record_count": _footer_row_count(p)}
-            for p in paths
-        ]
+        files = [_file_entry(p, "pos-delete") for p in paths]
         return self._commit("delete-position", files)
 
     def add_equality_deletes(
@@ -866,16 +995,23 @@ class MoRTable:
             for b in df:
                 assert set(b.columns) == set(cols), (b.columns, cols)
             paths = self._write_batches_one_job(
-                [b.select(*cols) for b in df], dest, "eq-delete"
+                [self._key_frame(b, cols) for b in df], dest, "eq-delete"
             )
         else:
             assert set(df.columns) == set(cols), (df.columns, cols)
-            paths = self._write_files(df.select(*cols), dest, "eq-delete", single_file)
-        files = [
-            {"path": p, "kind": "eq-delete", "record_count": _footer_row_count(p), "equality_ids": ids}
-            for p in paths
-        ]
+            paths = self._write_files(
+                self._key_frame(df, cols), dest, "eq-delete", single_file
+            )
+        files = [{**_file_entry(p, "eq-delete"), "equality_ids": ids} for p in paths]
         return self._commit("delete-equality", files, equality_ids=ids)
+
+    def _key_frame(self, df: DataFrame, cols: list[str]) -> DataFrame:
+        """``df`` projected to the key columns AS the table types: the
+        scan reads equality-delete files with the table's key schema, and
+        a parquet column written wider (say long for an int key) cannot
+        be read back narrower."""
+        types = self.schema.to_spark()
+        return df.select(*[F.col(c).cast(types[c].dataType).alias(c) for c in cols])
 
     def merge(self, source: DataFrame, on_ids: list[int] | None = None) -> dict:
         """MERGE INTO (upsert): rows whose key matches a source row are
@@ -898,11 +1034,13 @@ class MoRTable:
         key_cols = self.schema.names_for_ids(ids)
         cols = [f.name for f in self.schema.fields]
         del_paths = self._write_files(
-            source.select(*key_cols).distinct(), self.path / "deletes", "eq-delete", True
+            self._key_frame(source, key_cols).distinct(),
+            self.path / "deletes",
+            "eq-delete",
+            True,
         )
         files = [
-            {"path": p, "kind": "eq-delete", "record_count": _footer_row_count(p), "equality_ids": ids}
-            for p in del_paths
+            {**_file_entry(p, "eq-delete"), "equality_ids": ids} for p in del_paths
         ]
         # on a partitioned table the merged-in data files must carry the
         # partition tuple + spec id like any append, or partition-filtered
@@ -914,7 +1052,7 @@ class MoRTable:
             files += self._write_partitioned_entries(source.select(*cols), spec)
         else:
             files += [
-                _data_file_entry(p)
+                _file_entry(p, "data")
                 for p in self._write_files(
                     source.select(*cols), self.path / "data", "data", False
                 )
@@ -1356,7 +1494,7 @@ class MoRTable:
             files = self._write_partitioned_entries(current, spec)
         else:
             files = [
-                _data_file_entry(p)
+                _file_entry(p, "data")
                 for p in self._write_files(
                     current, self.path / "data", "compacted", False
                 )
@@ -1475,7 +1613,7 @@ class MoRTable:
                 .drop("__z")
             )
             paths = self._write_files(zdf, self.path / "data", "zorder", False)
-            files = [_data_file_entry(p) for p in paths]
+            files = [_file_entry(p, "data") for p in paths]
         return self._commit("replace", files, baseline=True, zorder_by=cols)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
@@ -1562,16 +1700,16 @@ class MoRTable:
         with self._meta_rollback():
             self._meta["snapshots"] = kept
             self._write_meta()
-        keep_paths = {_canon_path(f["path"]) for s in kept for f in s["files"]}
+        keep_paths = {_file_id(f["path"]) for s in kept for f in s["files"]}
         # de-duplicate across expired snapshots (review r8): a rollback
         # baseline re-references earlier files, so one path can appear in
         # several expired snapshots — unlinking per entry over-counted
         # removed_files against the filesystem reality
         doomed = {
-            _canon_path(f["path"]): f["path"]
+            _file_id(f["path"]): f["path"]
             for s in expired
             for f in s["files"]
-            if _canon_path(f["path"]) not in keep_paths
+            if _file_id(f["path"]) not in keep_paths
         }
         for raw in doomed.values():
             Path(raw).unlink(missing_ok=True)
@@ -1691,11 +1829,25 @@ class MoRTable:
     ) -> DataFrame:
         """Read the table state as of ``snapshot_id`` (default: current).
 
-        Plan shape: parquet scan of the data files (+hidden ``_metadata``)
-        → anti-join position deletes on (file, pos) → anti-join equality
-        deletes on key columns with ``data.seq < delete.seq``.  Both delete
-        sides are tiny relative to data and broadcast, so the data side is
-        never shuffled by the read itself.
+        Plan shape: delete files are scoped to data files at PLANNING
+        time (``_delete_scope``).  Data files no live delete can touch are
+        a plain parquet scan, unioned in with no join.  The rest are read
+        with the hidden ``_metadata`` (its percent-encoded path decoded
+        by ``_file_id_col``) → filtered by the position runs recorded at
+        commit (``_pos_runs``) → anti-joined against the other position
+        deletes that can name them on (file, pos) → anti-joined against
+        the equality deletes that can match them on the key columns with
+        ``data.seq < delete.seq``; a ``where`` range on a key column also
+        bounds the equality deletes read (a key outside it can only
+        match rows the residual drops).  ``data.seq`` is a literal expression
+        over ``_metadata.file_path`` (no file → seq join), and each
+        delete sequence number's equality files are ONE parquet scan with
+        the table's key schema (no schema-inferring footer job).  Delete
+        sides are unhinted; the planner broadcasts them when small, so
+        the data side is never shuffled by the read itself.  Delete
+        files committed without footer stats apply to every data file,
+        and such equality-delete files keep a schema-inferring read (they
+        may hold a wider type than the key schema).
         """
         data_files = self._files_of_kind("data", snapshot_id)
         if where:
@@ -1748,25 +1900,14 @@ class MoRTable:
                     for k, v in partition_filter.items()
                 )
             ]
-        cols = [f.name for f in self.schema.fields]
         if not data_files:
             return self.spark.createDataFrame([], self.schema.to_spark())
+        plain, touched, pos_files, eq_files, pos_runs = self._delete_scope(
+            data_files, snapshot_id, where
+        )
 
-        def _read(paths: list[str]) -> DataFrame:
-            return (
-                self.spark.read.schema(self.schema.to_spark())
-                .parquet(*paths)
-                .select(
-                    *cols,
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            )
-
-        if partition_filter:
-            # split the surviving files by which keys still need the
+        def _read(files: list[dict], meta: bool) -> DataFrame:
+            # split the files by which partition keys still need the
             # ROW-level residual (review r9): a file that is
             # prune-eligible on k was kept because its STORED partition
             # value equals the filter value, and the Iceberg contract
@@ -1778,10 +1919,10 @@ class MoRTable:
             # key.  Groups are tiny (one per residual-key combination —
             # 1-2 in practice), so the union adds no shuffle.
             groups: dict[frozenset, list[dict]] = {}
-            for f in data_files:
+            for f in files:
                 need = frozenset(
                     k
-                    for k, v in partition_filter.items()
+                    for k, v in (partition_filter or {}).items()
                     if k not in (f.get("partition") or {})
                     or f.get("spec_id") not in eligible[k]
                     # ambiguous rendering: the value-match above was
@@ -1791,7 +1932,15 @@ class MoRTable:
                 groups.setdefault(need, []).append(f)
             parts = []
             for need, fs in sorted(groups.items(), key=lambda kv: sorted(kv[0])):
-                part = _read([f["path"] for f in fs])
+                part = self.spark.read.schema(self.schema.to_spark()).parquet(
+                    *[f["path"] for f in fs]
+                )
+                if meta:
+                    part = part.select(
+                        *part.columns,
+                        _file_id_col(F.col("_metadata.file_path")).alias("__file"),
+                        F.col("_metadata.row_index").alias("__pos"),
+                    )
                 for k in sorted(need):
                     # eqNullSafe: identical to == for non-null probes,
                     # and lets partition_filter={'c': None} actually
@@ -1803,13 +1952,107 @@ class MoRTable:
                         )
                     )
                 parts.append(part)
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-        else:
-            df = _read([f["path"] for f in data_files])
+            return reduce(DataFrame.unionByName, parts)
 
-        pos_files = self._files_of_kind("pos-delete", snapshot_id)
+        parts = [_read(plain, keep_meta)] if plain else []
+        if touched:
+            mor = self._apply_deletes(
+                _read(touched, True), touched, pos_files, eq_files, pos_runs, where
+            )
+            parts.append(mor if keep_meta else mor.drop("__file", "__pos"))
+        df = reduce(DataFrame.unionByName, parts)
+        if where:  # residual predicate: exactness never depends on stats
+            for c, (lo, hi) in where.items():
+                if lo is not None:
+                    df = df.where(F.col(c) >= F.lit(lo))
+                if hi is not None:
+                    df = df.where(F.col(c) <= F.lit(hi))
+        return df
+
+    def _delete_scope(
+        self,
+        data_files: list[dict],
+        snapshot_id: int | None,
+        where: dict[str, tuple] | None = None,
+    ) -> tuple[list[dict], list[dict], list[dict], list[dict], dict[str, list]]:
+        """Iceberg scan planning for deletes: split ``data_files`` into
+        the ones no live delete file can touch and the ones some can, and
+        keep only the delete files that can touch at least one of the
+        latter.  Equality-delete files whose key bounds miss the scan's
+        ``where`` ranges are left out first (``_eq_delete_in_where``).
+        Position-delete files carrying ``pos_runs`` are returned as runs
+        per data file (``_file_id`` → runs) instead of as files to join,
+        unless the scan would hold more than ``_POS_RUNS_MAX`` runs.
+        Returns ``(plain, touched, pos_files, eq_files, pos_runs)``."""
+        pos_all = self._files_of_kind("pos-delete", snapshot_id)
+        eq_all = []
+        eq_keys = []
+        for f in self._files_of_kind("eq-delete", snapshot_id):
+            keys = self.schema.names_for_ids(list(f["equality_ids"]))
+            if _eq_delete_in_where(f, keys, where):
+                eq_all.append(f)
+                eq_keys.append(keys)
+        plain, touched = [], []
+        pos_used: set[int] = set()
+        eq_used: set[int] = set()
+        run_files: dict[str, list[int]] = {}
+        for d in data_files:
+            data_id = _file_id(d["path"])
+            pos_hit = {
+                i for i, f in enumerate(pos_all) if _pos_delete_may_apply(data_id, f)
+            }
+            eq_hit = {
+                i
+                for i, f in enumerate(eq_all)
+                if _eq_delete_may_apply(d, f, eq_keys[i])
+            }
+            (touched if pos_hit or eq_hit else plain).append(d)
+            for i in pos_hit:
+                if "pos_runs" in pos_all[i]:
+                    run_files.setdefault(data_id, []).append(i)
+                else:
+                    pos_used.add(i)
+            eq_used |= eq_hit
+        pos_runs = {
+            data_id: [r for i in idx for r in pos_all[i]["pos_runs"]["runs"]]
+            for data_id, idx in run_files.items()
+        }
+        if sum(map(len, pos_runs.values())) > _POS_RUNS_MAX:
+            # too many filter terms for one scan: join those files too
+            pos_used |= {i for idx in run_files.values() for i in idx}
+            pos_runs = {}
+        return (
+            plain,
+            touched,
+            [pos_all[i] for i in sorted(pos_used)],
+            [eq_all[i] for i in sorted(eq_used)],
+            pos_runs,
+        )
+
+    def _apply_deletes(
+        self,
+        df: DataFrame,
+        data_files: list[dict],
+        pos_files: list[dict],
+        eq_files: list[dict],
+        pos_runs: dict[str, list],
+        where: dict[str, tuple] | None,
+    ) -> DataFrame:
+        """Apply the given deletes to ``df`` (rows of ``data_files`` with
+        ``__file`` and ``__pos``): position runs as a filter, the other
+        position-delete files and the equality-delete files (their key
+        columns restricted to the ``where`` ranges) as anti-joins."""
+        if pos_runs:
+            gone = []
+            for data_id, runs in sorted(pos_runs.items()):
+                hit = reduce(
+                    lambda a, b: a | b,
+                    [F.col("__pos").between(lo, hi) for lo, hi in sorted(runs)],
+                )
+                if len(data_files) > 1:  # else every row is that file's
+                    hit = (F.col("__file") == data_id) & hit
+                gone.append(hit)
+            df = df.where(~reduce(lambda a, b: a | b, gone))
         if pos_files:
             pos = self.spark.read.schema("file_path string, pos long").parquet(
                 *[f["path"] for f in pos_files]
@@ -1826,53 +2069,68 @@ class MoRTable:
                 (df["__file"] == pos["file_path"]) & (df["__pos"] == pos["pos"]),
                 "left_anti",
             )
-
-        eq_files = self._files_of_kind("eq-delete", snapshot_id)
-        if eq_files:
-            # file -> sequence number map is file-level metadata (tiny)
-            seq_rows = [(_canon_path(f["path"]), f["sequence_number"]) for f in data_files]
-            file_seq = self.spark.createDataFrame(seq_rows, "__file2 string, __data_seq int")
-            df = df.join(F.broadcast(file_seq), df["__file"] == file_seq["__file2"], "left").drop(
-                "__file2"
-            )
-            # group eq-delete files by their equality-id set (usually one);
-            # _files_of_kind already merged sequence numbers and the
-            # snapshot-level equality_ids fallback into each entry
-            by_ids: dict[tuple[int, ...], list[dict]] = {}
-            for f in eq_files:
-                by_ids.setdefault(tuple(f["equality_ids"]), []).append(f)
-            for ids, dfiles in by_ids.items():
-                key_cols = self.schema.names_for_ids(list(ids))
-                parts = []
-                for f in dfiles:
-                    part = self.spark.read.parquet(f["path"]).select(*key_cols)
-                    parts.append(part.withColumn("__del_seq", F.lit(f["sequence_number"])))
-                dels = parts[0]
-                for p in parts[1:]:
-                    dels = dels.unionAll(p)
-                cond = F.col("__data_seq") < F.col("__del_seq")
-                for c in key_cols:
-                    # eqNullSafe (review r10): Iceberg equality deletes
-                    # match null to null; a plain == evaluates NULL for
-                    # a NULL key and the anti-join kept the row forever
-                    # while summary()'s derived count subtracted it
-                    cond = cond & df[c].eqNullSafe(dels[c])
-                # unhinted like the pos-delete side above: eq-delete key
-                # sets are data-dependent too (review r8)
-                df = df.join(dels, cond, "left_anti")
-            df = df.drop("__data_seq")
-
-        if not keep_meta:
-            df = df.drop("__file", "__pos")
-        if where:  # residual predicate: exactness never depends on stats
-            for c, (lo, hi) in where.items():
+        if not eq_files:
+            return df
+        # data.seq as a literal: one value, or one isin branch per value
+        # (file-level metadata — no per-scan file → seq join)
+        by_seq: dict[int, list[str]] = {}
+        for f in data_files:
+            by_seq.setdefault(f["sequence_number"], []).append(_file_id(f["path"]))
+        if len(by_seq) == 1:
+            data_seq = F.lit(next(iter(by_seq)))
+        else:
+            data_seq = None
+            for seq, paths in sorted(by_seq.items()):
+                hit = F.col("__file").isin(paths)
+                data_seq = F.when(hit, seq) if data_seq is None else data_seq.when(hit, seq)
+        df = df.withColumn("__data_seq", data_seq)
+        # group eq-delete files by their equality-id set (usually one),
+        # then by sequence number: one key-schema scan per number
+        # (_files_of_kind already merged sequence numbers and the
+        # snapshot-level equality_ids fallback into each entry)
+        by_ids: dict[tuple[int, ...], dict[int, list[dict]]] = {}
+        for f in eq_files:
+            by_ids.setdefault(tuple(f["equality_ids"]), {}).setdefault(
+                f["sequence_number"], []
+            ).append(f)
+        types = self.schema.to_spark()
+        for ids, files_by_seq in by_ids.items():
+            key_cols = self.schema.names_for_ids(list(ids))
+            key_schema = T.StructType([types[c] for c in key_cols])
+            sides = []
+            for seq, files in sorted(files_by_seq.items()):
+                typed = [f["path"] for f in files if "null_counts" in f]
+                # files committed without footer stats predate the cast
+                # to the table types (_key_frame) and may hold a wider
+                # parquet type than the key schema can read: they keep a
+                # schema-inferring read, and the union widens the types
+                reads = [self.spark.read.schema(key_schema).parquet(*typed)] if typed else []
+                reads += [
+                    self.spark.read.parquet(f["path"]).select(*key_cols)
+                    for f in files
+                    if "null_counts" not in f
+                ]
+                sides += [r.withColumn("__del_seq", F.lit(seq)) for r in reads]
+            dels = reduce(DataFrame.unionAll, sides)
+            for c in key_cols:
+                # a delete key outside the where range can only match
+                # rows the residual predicate drops anyway
+                lo, hi = (where or {}).get(c, (None, None))
                 if lo is not None:
-                    df = df.where(F.col(c) >= F.lit(lo))
+                    dels = dels.where(F.col(c) >= F.lit(lo))
                 if hi is not None:
-                    df = df.where(F.col(c) <= F.lit(hi))
-        # (partition_filter residual is applied per file group at read
-        # time above — value-matched newest-spec files pay nothing)
-        return df
+                    dels = dels.where(F.col(c) <= F.lit(hi))
+            cond = F.col("__data_seq") < F.col("__del_seq")
+            for c in key_cols:
+                # eqNullSafe (review r10): Iceberg equality deletes
+                # match null to null; a plain == evaluates NULL for
+                # a NULL key and the anti-join kept the row forever
+                # while summary()'s derived count subtracted it
+                cond = cond & df[c].eqNullSafe(dels[c])
+            # unhinted like the pos-delete side above: eq-delete key
+            # sets are data-dependent too (review r8)
+            df = df.join(dels, cond, "left_anti")
+        return df.drop("__data_seq")
 
     def plan_report(self, where: dict[str, tuple]) -> dict:
         """Planning-time pruning report: how many live data files the
@@ -1880,13 +2138,18 @@ class MoRTable:
         ``_stats_overlap`` decision ``scan(where=...)`` makes, exposed
         as supported surface (review r10: the q_mor_prune_report
         operator reached into the private ``_files_of_kind`` /
-        ``_stats_overlap`` internals, which churn across rounds)."""
+        ``_stats_overlap`` internals, which churn across rounds).
+        ``files_with_deletes`` counts the surviving files that still have
+        deletes applied (position runs or anti-joins), by the scan's own
+        ``_delete_scope``."""
         files = self._files_of_kind("data", None)
         surviving = [f for f in files if _stats_overlap(f.get("stats"), where)]
+        touched = self._delete_scope(surviving, None, where)[1]
         return {
             "total_files": len(files),
             "pruned_files": len(files) - len(surviving),
             "surviving_files": len(surviving),
+            "files_with_deletes": len(touched),
         }
 
     # -- summary (O14) ------------------------------------------------------

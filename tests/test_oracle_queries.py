@@ -222,7 +222,8 @@ def test_broadcast_hint_census():
         # r9 #1); the micro-batch broadcast now comes from the size
         # estimate, executed-plan-asserted in
         # tests/test_streaming.py::test_stream_static_join_broadcasts_by_size_estimate
-        "table/table.py": 1,
+        # table/table.py: 0 — the MoR scan's file → sequence-number map
+        # (its one hinted side) is now a literal expression, not a join
     }
     got = {}
     for p in sorted(base.rglob("*.py")):

@@ -282,6 +282,71 @@ def test_mor_merge_scan_broadcasts_delete_side(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _scoped_mor_table(spark, path):
+    """Three data files (bars 0..99 and 100..199 at seq 1, 200..299 at
+    seq 2): a position delete names the first, an equality delete on
+    keys 205..209 can only match the third, the second is untouched."""
+    from iceberg_data_gen_spark.datagen.config import FileConfig
+    from iceberg_data_gen_spark.datagen.generator import FixSchemaGenerator
+    from iceberg_data_gen_spark.table.table import MoRTable
+
+    gen = FixSchemaGenerator(FileConfig(10, 1), FileConfig(10, 1), FileConfig(10, 1))
+    t = MoRTable.create(spark, path, gen.schema())
+    snap = t.append_batches([gen._row_df(spark, 0, 100), gen._row_df(spark, 100, 200)])
+    t.append_batches([gen._row_df(spark, 200, 300)])
+    t.add_position_deletes(
+        spark.createDataFrame(
+            [(snap["files"][0]["path"], 0)], "file_path string, pos long"
+        )
+    )
+    t.add_equality_deletes(gen._row_df(spark, 205, 210).select("foo", "bar"), [1, 2])
+    return t
+
+
+def test_mor_pruned_untouched_scan_has_no_join(spark, tmp_path):
+    # a where read pruned to a data file no delete can touch is a plain
+    # parquet scan: delete scoping leaves it no anti-join to pay
+    t = _scoped_mor_table(spark, str(tmp_path / "t"))
+    df = t.scan(where={"bar": (150, 160)})
+    assert t.plan_report({"bar": (150, 160)})["files_with_deletes"] == 0
+    plan = plan_of(df, mode="simple")
+    assert "Join" not in plan, plan
+    assert df.count() == 11
+
+
+def test_mor_position_runs_and_where_scoping_need_no_join(spark, tmp_path):
+    # the position delete on the first file is one run: a read pruned to
+    # that file filters on row_index.  A where range outside the equality
+    # delete's keys (205..209) leaves the third file untouched.
+    t = _scoped_mor_table(spark, str(tmp_path / "t"))
+    for where, rows in (({"bar": (0, 99)}, 99), ({"bar": (200, 204)}, 5)):
+        df = t.scan(where=where)
+        plan = plan_of(df, mode="simple")
+        assert "Join" not in plan, (where, plan)
+        assert df.count() == rows
+    assert t.plan_report({"bar": (0, 99)})["files_with_deletes"] == 1
+    assert t.plan_report({"bar": (200, 204)})["files_with_deletes"] == 0
+
+
+def test_mor_scan_plans_have_no_python_rdd(spark, tmp_path):
+    # the data file -> sequence number map is a literal expression, not
+    # a createDataFrame relation joined in (a Python-RDD job per read)
+    t = _scoped_mor_table(spark, str(tmp_path / "t"))
+    scans = {
+        "full": t.scan(),
+        "pruned": t.scan(where={"bar": (0, 50)}),
+        "snapshot": t.scan(snapshot_id=1),
+        "keep_meta": t._scan_resolved(keep_meta=True),
+        "q_mor_scan": q("q_mor_scan", spark),
+        "q_mor_merge": q("q_mor_merge", spark),
+    }
+    for name, df in scans.items():
+        plan = plan_of(df, mode="simple")
+        assert "ExistingRDD" not in plan, (name, plan)
+    assert "LeftAnti" in plan_of(scans["full"], mode="simple")
+    assert scans["full"].count() == 294
+
+
 def test_lateral_topk_decorrelates_to_window(spark):
     """The correlated LATERAL ... ORDER BY ... LIMIT must decorrelate
     into a per-key window rank + equi-join — NOT re-execute the subquery
