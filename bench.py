@@ -250,8 +250,8 @@ def main() -> None:
     # it to measure.  Pass 1 is therefore the COLD number and pass 2 the
     # WARM one; min() reports steady-state.  Per-call cache leaks (the
     # hazard the r6 clear guarded against) are handled at the source:
-    # review-enforced unpersist in the audits and the session-bound
-    # _trained_session cache that evicts dead-session entries.
+    # review-enforced unpersist in the audits and the artifact cache
+    # (README "Artifact cache"), which unpersists what it drops.
     spark.catalog.clearCache()
 
     # TWO INTERLEAVED full passes, min per query.  This host stalls in

@@ -6,6 +6,7 @@ designed for 100 TB scale.
 Subpackages
 -----------
 - ``session``   : tuned SparkSession factory (AQE, shuffle partitions, Arrow)
+- ``artifacts`` : the one session-scoped cache for values derived from input files
 - ``table``     : lightweight merge-on-read table format (Iceberg semantics:
                   snapshots, data / position-delete / equality-delete files)
 - ``datagen``   : DataGenerator ABC + the reference's fixed-schema generator

@@ -44,6 +44,7 @@ from iceberg_data_gen_spark.operators.common import (
     dsum_sql,
     iso_weekday,
     spread_scan,
+    table_artifact,
 )
 from iceberg_data_gen_spark.operators.common import docs_table as _docs
 from iceberg_data_gen_spark.session import load_tables
@@ -566,7 +567,6 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PR_ITERS = 3
-_PR_EDGE_CACHE: dict[tuple, object] = {}
 
 PR_SCALE = 1_000_000  # integer mass per node
 # damping as an integer percentage, interpolated into BOTH the Spark
@@ -654,41 +654,18 @@ def q_event_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nodes = ev.select(F.col("event_type").alias("node")).distinct()
     outw = edges.groupBy("src").agg(F.sum("w").alias("tw"))
-    # ONE cached edge table per (session, corpus), reused across
-    # invocations — a per-call .cache() pinned a fresh never-released copy
-    # in executor storage every time the query ran (bench loops run it
-    # repeatedly).  Keyed on applicationId too: a DataFrame cached under a
-    # stopped SparkSession is unusable by its successor in-process.
-    app_id = spark.sparkContext.applicationId
-    key = ("pagerank_edges", app_id, sf_dir)
-    if key not in _PR_EDGE_CACHE:
-        # evict on insert (review r8): dead-session entries are dropped,
-        # and SAME-session entries for OTHER corpora are unpersisted
-        # first — a session that benches several sf_dirs otherwise pins
-        # one never-released cached edge table per corpus in executor
-        # storage.  (A corpus at a path is immutable in-process — the
-        # repo-wide cache contract — so a live same-path entry is never
-        # stale.)
-        for stale in [k for k in _PR_EDGE_CACHE if k != key]:
-            if stale[1] == app_id:
-                try:
-                    for df in _PR_EDGE_CACHE[stale]:
-                        df.unpersist()
-                except Exception:
-                    pass  # session died mid-unpersist: nothing to free
-            del _PR_EDGE_CACHE[stale]
-        # nodes rides the same cache entry (r13, guide §2.4): the node
-        # table appears in EVERY iteration's mass plan (PR_ITERS × 2 + 1
-        # subtrees), and uncached each appearance re-scanned events and
-        # re-ran the distinct — ~7 redundant scan+agg jobs per call.
-        # Caching the |event types|-row table is also the 100 TB
-        # posture: the rank vector's node spine is the one relation an
-        # iterative graph job must NOT recompute per iteration.
-        _PR_EDGE_CACHE[key] = (
-            edges.join(outw, "src").cache(),
-            nodes.cache(),
-        )
-    edges, nodes = _PR_EDGE_CACHE[key]
+    # ONE cached edge table per (session, corpus) as an artifact — a
+    # per-call .cache() pinned a fresh never-released copy in executor
+    # storage every time the query ran (bench loops run it repeatedly).
+    # nodes rides the same entry (r13, guide §2.4): the node table
+    # appears in EVERY iteration's mass plan (PR_ITERS × 2 + 1 subtrees),
+    # and uncached each appearance re-scanned events and re-ran the
+    # distinct — ~7 redundant scan+agg jobs per call.  Caching the
+    # |event types|-row table is also the 100 TB posture: the rank
+    # vector's node spine is the one relation an iterative graph job
+    # must NOT recompute per iteration.
+    spine = lambda: (edges.join(outw, "src").cache(), nodes.cache())  # noqa: E731
+    edges, nodes = table_artifact(spark, sf_dir, "events", ("pagerank_edges",), spine)
 
     base = PR_BASE
     mass = nodes.withColumn("mass", F.lit(PR_SCALE).cast("long"))

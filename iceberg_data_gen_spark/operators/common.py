@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iceberg_data_gen_spark.session import load_tables
+from iceberg_data_gen_spark import artifacts
+from iceberg_data_gen_spark.session import load_tables, table_path
 
 
 def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -20,20 +21,18 @@ def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir, ("documents",))["documents"]
 
 
-# (applicationId, sf_dir, table) -> the table's raw-scan partition count.
-# The corpus at a path is immutable in-process (repo-wide cache contract)
-# and the scan split count depends only on the file layout + session
-# conf, so one planning pass per (session, table) is enough.
-_SCAN_PARTS: dict[tuple, int] = {}
+def table_artifact(spark: SparkSession, sf_dir: str, table: str, key: tuple, build):
+    """``artifacts.get`` for a value built from testdata table *table* alone."""
+    path = table_path(sf_dir, table)
+    return artifacts.get(spark, (*key, path), build, (path,))
 
 
 def scan_parallelism(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Number of tasks a plain scan of testdata table *name* runs on."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _SCAN_PARTS:
-        df = load_tables(spark, sf_dir, (name,))[name]
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
-    return _SCAN_PARTS[key]
+    def build():
+        return load_tables(spark, sf_dir, (name,))[name].rdd.getNumPartitions()
+
+    return table_artifact(spark, sf_dir, name, ("scan_parts",), build)
 
 
 def spread_scan(df: DataFrame, sf_dir: str, name: str, key: str) -> DataFrame:

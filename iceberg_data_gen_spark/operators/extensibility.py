@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_data_gen_spark import artifacts
 from iceberg_data_gen_spark.operators import register
 from iceberg_data_gen_spark.operators.common import docs_table
 from iceberg_data_gen_spark.operators.common import dsum, dsum_sql
@@ -202,14 +203,6 @@ def _fix_rows(spark: SparkSession, a: int, b: int, baz: bool = True) -> DataFram
     )
 
 
-# one reference-table build per SparkSession: q_mor_scan / time-travel /
-# metadata queries all read the same prepared warehouse.  Keyed by the
-# session's applicationId — id(spark) is reusable after GC, which could
-# serve a dead session's (possibly tmp-reaped) warehouse to a new one.
-_MOR_CACHE: dict[str, str] = {}
-
-
-
 def _build_reference_warehouse(spark: SparkSession, prefix: str) -> str:
     """Build the reference 5×1000-data / 2×1000-pos / 2×1000-eq warehouse
     (the fixture shape every ``q_mor_*`` oracle encodes) into a fresh
@@ -243,10 +236,11 @@ def _load_reference(spark: SparkSession, wh: str):
 
 
 def _reference_table(spark: SparkSession):
-    key = spark.sparkContext.applicationId
-    if key not in _MOR_CACHE:
-        _MOR_CACHE[key] = _build_reference_warehouse(spark, "mor-scan-")
-    return _load_reference(spark, _MOR_CACHE[key])
+    # one build per session (an artifact): q_mor_scan / time-travel /
+    # metadata queries all read the same prepared warehouse
+    build = lambda: _build_reference_warehouse(spark, "mor-scan-")  # noqa: E731
+    wh = artifacts.get(spark, ("mor_reference",), build)
+    return _load_reference(spark, wh)
 
 
 @register(

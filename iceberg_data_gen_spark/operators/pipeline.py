@@ -31,10 +31,8 @@ from pyspark.sql.window import Window
 
 from iceberg_data_gen_spark.operators import register
 from iceberg_data_gen_spark.operators.common import doc_order_key, ttr_expr
+from iceberg_data_gen_spark.operators.common import table_artifact
 from iceberg_data_gen_spark.operators.common import docs_table as _docs
-
-
-_CURRICULUM_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _shard_of(h: F.Column) -> F.Column:
@@ -262,10 +260,11 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture it would funnel the corpus through 16 sort tasks,
     exactly the bottleneck the operator exists to avoid); the global
     ranks are invariant to the count because the key is a total order.
-    The eager localCheckpoint is session-cached per (session, corpus)
-    like the pagerank edge table (review r10: a per-call checkpoint
-    pinned a fresh never-released corpus-sized copy in executor storage
-    on every invocation — bench loops run this repeatedly).
+    The eager localCheckpoint is an artifact per (session, corpus,
+    n_parts) like the pagerank edge table (review r10: a per-call
+    checkpoint pinned a fresh never-released corpus-sized copy in
+    executor storage on every invocation — bench loops run this
+    repeatedly).
     """
 
     # id-less docs drop (r11 keys pass): the rank tie-break is doc_id
@@ -275,22 +274,15 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n_parts = 16  # e.g. "auto" under some AQE configs
-    app_id = spark.sparkContext.applicationId
-    key = ("curriculum_rp", app_id, sf_dir, n_parts)
-    if key not in _CURRICULUM_CACHE:
-        # Dropping the dict entry is the WHOLE eviction (ADVICE r10):
-        # localCheckpoint blocks are not registered with the CacheManager,
-        # so DataFrame.unpersist() on them is a no-op — release happens
-        # when the checkpointed RDD is garbage-collected and the
-        # ContextCleaner reclaims its blocks, which this del enables.
-        for stale in [k for k in _CURRICULUM_CACHE if k != key]:
-            del _CURRICULUM_CACHE[stale]
-        rp = d.repartitionByRange(
-            n_parts, F.desc("ttr"), F.asc("doc_id")
-        ).withColumn("pid", F.spark_partition_id())
-        # pin partitioning: pid must be stable across the count + window
-        _CURRICULUM_CACHE[key] = rp.localCheckpoint(eager=True)
-    rp = _CURRICULUM_CACHE[key]
+    # pin partitioning: pid must be stable across the count + window.
+    # localCheckpoint blocks are not registered with the CacheManager
+    # (ADVICE r10): a dropped artifact is released when the checkpointed
+    # RDD is garbage-collected and the ContextCleaner reclaims its blocks
+    def build():
+        rp = d.repartitionByRange(n_parts, F.desc("ttr"), F.asc("doc_id"))
+        return rp.withColumn("pid", F.spark_partition_id()).localCheckpoint(eager=True)
+
+    rp = table_artifact(spark, sf_dir, "documents", ("curriculum_rp", n_parts), build)
     # partition sizes -> exclusive prefix offsets (n_parts rows on the driver)
     sizes = {r["pid"]: r["cnt"] for r in rp.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, acc = {}, 0

@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+from iceberg_data_gen_spark import artifacts
+
+
 def _external_master() -> bool:
     """True when a launcher outside this process owns the master setting
     (spark-submit's gateway env, or an explicit SPARK_MASTER opt-out)."""
@@ -101,24 +104,9 @@ TABLES = (
 )
 
 
-# (applicationId, id(session), sf_dir, name) -> loaded DataFrame.  A
-# DataFrame is a PLAN, not data: memoizing the handle skips the
-# per-invocation driver work of re-resolving the source and re-reading
-# the parquet footer (~0.1-0.3s per table per call — r13 measured; a
-# query touching six tables paid ~0.8s of pure plan-building per bench
-# pass), while every EXECUTION still scans the parquet files.  The
-# corpus at a path is immutable in-process (repo-wide cache contract);
-# note the memo also freezes the table's parquet FILE LISTING at first
-# load, which that same contract makes safe.  The key carries the
-# applicationId so a DataFrame never outlives its SparkContext, AND
-# id(session) (ADVICE r13) because a DataFrame is bound to the
-# SparkSession that built it: two sessions sharing one context
-# (newSession/cloneSession) share an applicationId but may resolve the
-# source under different confs.  The events table is excluded: its
-# loader sniffs the physical layout and conditions a session conf
-# (nanosAsLong) that streaming runners restore afterwards, so its plan
-# must be rebuilt under the conf state of each call.
-_TABLE_CACHE: dict[tuple, "object"] = {}
+def table_path(sf_dir: str, name: str) -> str:
+    """Where testdata table *name* lives under corpus directory *sf_dir*."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -132,7 +120,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     the same value DuckDB produces — so every downstream query and oracle
     comparison sees one canonical type regardless of the file layout.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
     if name == "events":
         from pyspark.sql.types import LongType
 
@@ -152,10 +140,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
         return normalize_events_ts(
             df, isinstance(df.schema["ts"].dataType, LongType)
         )
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = spark.read.parquet(path)
-    return _TABLE_CACHE[key]
+    # Every other handle is an artifact.  A DataFrame is a PLAN, not data:
+    # reuse skips re-resolving the source and re-reading the parquet footer
+    # (~0.1-0.3s per table per call — r13 measured), while every EXECUTION
+    # still scans the file.  The events plan above is rebuilt per call: its
+    # loader conditions a session conf (nanosAsLong) that streaming runners
+    # restore afterwards.
+    build = lambda: spark.read.parquet(path)  # noqa: E731
+    return artifacts.get(spark, ("table", path), build, [path])
 
 
 def load_tables(
@@ -170,7 +162,7 @@ def load_tables(
     """
     dfs = {}
     for name in names if names is not None else TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
+        path = table_path(sf_dir, name)
         if not os.path.exists(path):
             if names is not None:
                 # an EXPLICITLY requested table that does not exist is a

@@ -82,6 +82,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from iceberg_data_gen_spark.operators import dedup
+    from iceberg_data_gen_spark.operators.common import table_artifact
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -92,13 +93,18 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    def seed_doc_count(sf_dir: str, n: int) -> None:
+        """Pre-seed dedup's doc-count artifact so the count scan stays
+        out of the exact-branch timing."""
+        table_artifact(spark, sf_dir, "documents", ("doc_count",), lambda: n)
+
     rows = []
     with tempfile.TemporaryDirectory() as td:
         # warmup: run both branches once on a tiny corpus so JVM/codegen
         # startup cost doesn't land on the first timed size
         warm = Path(td) / "warmup"
         make_corpus(warm, 300)
-        dedup._DOC_COUNT[str(warm)] = 300
+        seed_doc_count(str(warm), 300)
         saved = dedup.DEDUP_LSH_MIN_DOCS
         dedup.DEDUP_LSH_MIN_DOCS = 10**12
         dedup._dup_edges(spark, str(warm)).count()
@@ -113,9 +119,8 @@ def main() -> int:
             sf_dir = str(d)
 
             os.environ.pop(dedup.DEDUP_LSH_ENV, None)
-            dedup._DOC_COUNT[sf_dir] = n  # pre-seed so the count scan
-            # doesn't pollute the exact-branch timing; force exact by
-            # lifting the threshold for this invocation
+            seed_doc_count(sf_dir, n)
+            # force exact by lifting the threshold for this invocation
             saved = dedup.DEDUP_LSH_MIN_DOCS
             dedup.DEDUP_LSH_MIN_DOCS = 10**12
             t0 = time.monotonic()

@@ -990,36 +990,31 @@ def test_asof_join_matched_row_travels_whole(spark):
     assert (out[0].a, out[0].b) == (None, 7), out
 
 
-def test_session_cache_evicts_stopped_sessions():
-    """_TRAINED / _PR_EDGE_CACHE entries keyed on a stopped session's
-    applicationId must be evicted when a new session inserts (ADVICE r6:
-    unbounded dict growth + retention of dead DataFrame object graphs in
-    processes that cycle sessions)."""
+def test_session_cache_evicts_stopped_sessions(monkeypatch):
+    """Artifacts of a stopped session must leave the store when another
+    session misses, whatever their kind (ADVICE r6: unbounded growth +
+    retention of dead DataFrame object graphs in processes that cycle
+    sessions)."""
     from types import SimpleNamespace
 
-    from iceberg_data_gen_spark.operators import similarity as sim
+    from iceberg_data_gen_spark import artifacts
 
     def fake(app_id):
         return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
-    snapshot = dict(sim._TRAINED)
-    try:
-        sim._TRAINED.clear()
-        v1 = sim._trained_session("kind_x", fake("app-1"), ("p",), lambda: "one")
-        assert v1 == "one"
-        # same session + key -> cached, no retrain
-        assert sim._trained_session("kind_x", fake("app-1"), ("p",), lambda: "BAD") == "one"
-        # new session inserting the same kind evicts the dead session's entry
-        v2 = sim._trained_session("kind_x", fake("app-2"), ("p",), lambda: "two")
-        assert v2 == "two"
-        assert ("kind_x", "app-1", "p") not in sim._TRAINED
-        # non-session-keyed entries (plain _trained) are untouched by eviction
-        sim._trained(("numpy_thing", 42), lambda: "keep")
-        sim._trained_session("kind_x", fake("app-3"), ("p",), lambda: "three")
-        assert sim._TRAINED[("numpy_thing", 42)] == "keep"
-    finally:
-        sim._TRAINED.clear()
-        sim._TRAINED.update(snapshot)
+    monkeypatch.setattr(artifacts, "_STORE", {})
+    s1, s2, s3 = fake("app-1"), fake("app-2"), fake("app-2")
+    assert artifacts.get(s1, ("kind_x", "p"), lambda: "one") == "one"
+    # same session + key -> cached, no rebuild
+    assert artifacts.get(s1, ("kind_x", "p"), lambda: "BAD") == "one"
+    artifacts.get(s1, ("kind_y", "p"), lambda: "other kind")
+    # a new session's miss drops the dead session's entries of EVERY kind
+    assert artifacts.get(s2, ("kind_x", "p"), lambda: "two") == "two"
+    assert len(artifacts._STORE) == 1
+    assert artifacts.get(s2, ("kind_x", "p"), lambda: "BAD") == "two"
+    # a second session on the same context is a different session too
+    assert artifacts.get(s3, ("kind_x", "p"), lambda: "three") == "three"
+    assert len(artifacts._STORE) == 1
 
 
 def test_zero_norm_embedding_does_not_poison_neardup(spark, tmp_path):
@@ -1273,27 +1268,30 @@ def test_norm_corpus_cached_and_reused_across_ann_invocations(spark):
     """VERDICT r8 #3: the unit-normalization pass (itself sequential-fold
     work) must run once per (session, corpus) — the second invocation of
     q_ann_bruteforce / q_knn_classify has to reuse the SAME cached
-    normalized frame through the _trained_session seam, and its executed
-    plan must scan the in-memory relation, not re-derive nv."""
-    from iceberg_data_gen_spark.operators import similarity as sim
+    normalized frame through the artifact cache, and its executed plan
+    must scan the in-memory relation, not re-derive nv."""
+    from iceberg_data_gen_spark.operators.common import table_artifact
 
-    app_id = spark.sparkContext.applicationId
-    key = ("ann_norm_corpus", app_id, SF_DIR)
-    sim._TRAINED.pop(key, None)
+    def cached():
+        key = ("ann_norm_corpus",)
+        return table_artifact(spark, SF_DIR, "embeddings", key, _not_cached)
 
     operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR).collect()
-    assert key in sim._TRAINED
-    first = sim._TRAINED[key]
+    first = cached()
 
     df2 = operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR)
     df2.collect()
-    assert sim._TRAINED[key] is first  # no retrain, no re-cache
+    assert cached() is first  # no retrain, no re-cache
     plan = df2._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, plan[:2000]
 
     # kNN shares the same entry (and adds none of its own)
     operators.QUERIES["q_knn_classify"](spark, SF_DIR).collect()
-    assert sim._TRAINED[key] is first
+    assert cached() is first
+
+
+def _not_cached():
+    raise AssertionError("artifact was not cached")
 
 
 def test_contamination_detects_planted_overlap(spark, tmp_path):

@@ -33,7 +33,7 @@ def test_spread_scan_repartitions_degenerate_scan(spark):
     assert "hashpartitioning(doc_id" in plan, plan
 
 
-def test_spread_scan_noop_on_already_parallel_input(spark):
+def test_spread_scan_noop_on_already_parallel_input(spark, monkeypatch):
     """At production scale the scan yields >= one split per core and
     spread_scan must be a NO-OP (no extra exchange survives to 100 TB).
     Simulated by a pre-spread DataFrame: the probe sees the parallel
@@ -42,17 +42,10 @@ def test_spread_scan_noop_on_already_parallel_input(spark):
 
     par = spark.sparkContext.defaultParallelism
     df = load_table(spark, SF_DIR, "documents").repartition(par, "doc_id")
-    key = (spark.sparkContext.applicationId, SF_DIR, "documents")
-    old = common._SCAN_PARTS.get(key)
-    common._SCAN_PARTS[key] = par  # healthy-layout probe result
-    try:
-        out = spread_scan(df, SF_DIR, "documents", "doc_id")
-        assert out is df  # identical plan object — zero added nodes
-    finally:
-        if old is None:
-            del common._SCAN_PARTS[key]
-        else:
-            common._SCAN_PARTS[key] = old
+    # healthy-layout probe result
+    monkeypatch.setattr(common, "scan_parallelism", lambda *a: par)
+    out = spread_scan(df, SF_DIR, "documents", "doc_id")
+    assert out is df  # identical plan object — zero added nodes
 
 
 def test_table_handle_memo_returns_same_plan_not_same_data(spark):

@@ -24,26 +24,25 @@ def test_dup_labels_memoized_per_session_and_branch(spark, monkeypatch):
     carry the branch actually taken — IDG_DEDUP_LSH flips within one
     session in the test suite and the two branches' label sets may
     legitimately differ."""
+    from iceberg_data_gen_spark.operators.common import table_artifact
     from iceberg_data_gen_spark.operators.dedup import _dedup_branch, _dup_labels
-    from iceberg_data_gen_spark.operators.similarity import _TRAINED
 
     monkeypatch.delenv("IDG_DEDUP_LSH", raising=False)
     a = _dup_labels(spark, SF_DIR)
     b = _dup_labels(spark, SF_DIR)
     assert a is b  # memo hit: no second eager build
     branch = _dedup_branch(spark, SF_DIR)
-    app_id = spark.sparkContext.applicationId
-    assert ("dup_labels", app_id, SF_DIR, branch) in _TRAINED
+    key = ("dup_labels", branch)
+    assert table_artifact(spark, SF_DIR, "documents", key, _not_cached) is a
     # the exact-branch labels must never be served to the forced-LSH
     # branch (its recall<1 label set is a different artifact)
     monkeypatch.setenv("IDG_DEDUP_LSH", "1")
     assert _dedup_branch(spark, SF_DIR) == "lsh"
-    assert ("dup_labels", app_id, SF_DIR, "lsh") != (
-        "dup_labels",
-        app_id,
-        SF_DIR,
-        branch,
-    )
+    assert _dup_labels(spark, SF_DIR) is not a
+
+
+def _not_cached():
+    raise AssertionError("artifact was not cached")
 
 
 def test_lsh_candidate_core_memoized_not_result_cached(spark):
@@ -52,20 +51,21 @@ def test_lsh_candidate_core_memoized_not_result_cached(spark):
     from — but the QUERY's est_jaccard output must still be computed per
     invocation from the signature table (the memo holds an INTERMEDIATE
     artifact, not the declared result)."""
-    from iceberg_data_gen_spark.operators.similarity import _TRAINED
+    from iceberg_data_gen_spark.operators.common import table_artifact
+
+    def cached():
+        key = ("lsh_candidates",)
+        return table_artifact(spark, SF_DIR, "documents", key, _not_cached)
 
     df = operators.QUERIES["q_minhash_lsh"](spark, SF_DIR)
-    app_id = spark.sparkContext.applicationId
-    key = ("lsh_candidates", app_id, SF_DIR)
-    assert key in _TRAINED
-    cand = _TRAINED[key]
+    cand = cached()
     assert set(cand.columns) == {"doc_a", "doc_b"}  # pairs only, no score
     assert cand.storageLevel.useMemory  # .cache()d artifact
     # the returned plan still scores: est_jaccard is not in the memo
     assert "est_jaccard" in df.columns
     # repeat invocation reuses the same candidate artifact
     operators.QUERIES["q_minhash_lsh"](spark, SF_DIR)
-    assert _TRAINED[key] is cand
+    assert cached() is cand
 
 
 def test_documents_doc_id_non_null_corpus_contract(spark):
@@ -79,7 +79,7 @@ def test_documents_doc_id_non_null_corpus_contract(spark):
     assert docs.where(F.col("doc_id").isNull()).count() == 0
 
 
-def test_spread_scan_skips_marginally_under_parallel_scans(spark):
+def test_spread_scan_skips_marginally_under_parallel_scans(spark, monkeypatch):
     """ADVICE r13: a production scan with slightly fewer splits than
     cores (800 splits / 1000 cores) must NOT pay a full extra exchange —
     only badly under-parallel scans (< par // 2) spread."""
@@ -88,20 +88,13 @@ def test_spread_scan_skips_marginally_under_parallel_scans(spark):
 
     par = spark.sparkContext.defaultParallelism
     df = load_table(spark, SF_DIR, "documents")
-    key = (spark.sparkContext.applicationId, SF_DIR, "documents")
-    old = common._SCAN_PARTS.get(key)
-    try:
-        common._SCAN_PARTS[key] = max(par // 2, 1)  # marginal: no-op
-        assert spread_scan(df, SF_DIR, "documents", "doc_id") is df
-        if par >= 4:  # degenerate: still spreads
-            common._SCAN_PARTS[key] = par // 2 - 1
-            out = spread_scan(df, SF_DIR, "documents", "doc_id")
-            assert out is not df
-    finally:
-        if old is None:
-            del common._SCAN_PARTS[key]
-        else:
-            common._SCAN_PARTS[key] = old
+    # marginal: no-op
+    monkeypatch.setattr(common, "scan_parallelism", lambda *a: max(par // 2, 1))
+    assert spread_scan(df, SF_DIR, "documents", "doc_id") is df
+    if par >= 4:  # degenerate: still spreads
+        monkeypatch.setattr(common, "scan_parallelism", lambda *a: par // 2 - 1)
+        out = spread_scan(df, SF_DIR, "documents", "doc_id")
+        assert out is not df
 
 
 def test_probe_tier_names_are_benched_queries():
