@@ -52,5 +52,7 @@ def _release(value) -> None:
         if isinstance(df, DataFrame):
             try:
                 df.unpersist()
-            except Py4JError:  # its session has stopped: nothing left to free
+            # its session has stopped, or the gateway it was built through
+            # has shut down and refuses the call: nothing left to free
+            except (Py4JError, ConnectionError):
                 pass

@@ -27,12 +27,21 @@ def table_artifact(spark: SparkSession, sf_dir: str, table: str, key: tuple, bui
     return artifacts.get(spark, (*key, path), build, (path,))
 
 
-def scan_parallelism(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Number of tasks a plain scan of testdata table *name* runs on."""
-    def build():
-        return load_tables(spark, sf_dir, (name,))[name].rdd.getNumPartitions()
+# the session confs that decide how a file scan is split into tasks
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
 
-    return table_artifact(spark, sf_dir, name, ("scan_parts",), build)
+
+def scan_parallelism(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Number of tasks a plain scan of testdata table *name* runs on
+    under the session's current split confs."""
+    def build():
+        # a fresh projection: the cached table handle keeps the splits
+        # of its first physical plan, whatever the confs say now
+        df = load_tables(spark, sf_dir, (name,))[name]
+        return df.select("*").rdd.getNumPartitions()
+
+    split = tuple(spark.conf.get(k) for k in _SPLIT_CONFS)
+    return table_artifact(spark, sf_dir, name, ("scan_parts", *split), build)
 
 
 def spread_scan(df: DataFrame, sf_dir: str, name: str, key: str) -> DataFrame:

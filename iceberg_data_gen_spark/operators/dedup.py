@@ -464,9 +464,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sa = sigs.alias("sa")
     sb = sigs.alias("sb")
-    agree = sum(
-        F.when(F.col(f"sa.h{i}") == F.col(f"sb.h{i}"), 1).otherwise(0)
-        for i in range(MINHASH_PERMS)
+    # one SQL expression, not one Column call per signature position
+    agree = " + ".join(
+        f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(MINHASH_PERMS)
     )
     return (
         cand.join(sa, cand["doc_a"] == F.col("sa.doc_id"))
@@ -474,7 +474,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.round(agree / F.lit(MINHASH_PERMS), 4).alias("est_jaccard"),
+            F.expr(f"round(({agree}) / {MINHASH_PERMS}, 4)").alias("est_jaccard"),
         )
     )
 
@@ -764,28 +764,31 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SimHash (md5-derived bits → oracle-checkable)
 # ---------------------------------------------------------------------------
 
-_HEX = "0123456789abcdef"
+def _simhash_total_sql() -> str:
+    """The 32-bit SimHash of one ``GROUP BY doc_id`` group of word hashes
+    ``h``, as ONE SQL expression spelled identically for Spark and
+    DuckDB: bit b is set when the ±1 majority vote is positive, i.e.
+    when 2·(number of words with bit b set) > (number of words) —
+    branch-free per row, one integer decision per group and bit."""
+    return " + ".join(
+        f"CASE WHEN 2 * sum((h >> {b}) & 1) > count(*) "
+        f"THEN CAST(1 AS BIGINT) << {b} ELSE 0 END"
+        for b in range(SIMHASH_BITS)
+    )
 
 
 def _simhash_oracle_sql() -> str:
     # per-word 32-bit hash — the ONE md5_hash32_sql definition shared
     # with text.py's temperature-sampling key (r11 review)
     word_hash = md5_hash32_sql("w")
-    bit_votes = ", ".join(
-        f"CASE WHEN sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
-        f"THEN 1::BIGINT << {b} ELSE 0 END AS v{b}"
-        for b in range(SIMHASH_BITS)
-    )
-    total = " + ".join(f"v{b}" for b in range(SIMHASH_BITS))
     return f"""
     WITH words AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
     ), hashed AS (
         SELECT doc_id, {word_hash} AS h FROM words
-    ), votes AS (
-        SELECT doc_id, {bit_votes} FROM hashed GROUP BY doc_id
     )
-    SELECT doc_id, CAST({total} AS BIGINT) AS simhash FROM votes
+    SELECT doc_id, CAST({_simhash_total_sql()} AS BIGINT) AS simhash
+    FROM hashed GROUP BY doc_id
     """
 
 
@@ -796,34 +799,21 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Word hash = first 8 hex digits of md5 (portable across engines);
     per-bit majority vote via 32 integer aggregates in ONE groupBy —
     the whole operator is a single shuffle regardless of corpus size.
+    The votes and the bit total are one SQL expression shared with the
+    oracle: built term by term as Columns, the plan took ~1560 py4j
+    calls (0.5 s) to describe against 0.24 s of execution.
     """
     # r13 (guide §2.5): the per-word md5 is this operator's CPU hot spot
     # and ran single-task on the one-row-group testdata scan — spread
     # first so the explode + hash + partial votes use every core.
     # Integer votes are order-insensitive, results bit-identical.
     docs = spread_scan(_docs(spark, sf_dir), sf_dir, "documents", "doc_id")
-    words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    h = F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
-    hashed = words.select("doc_id", h.alias("h"))
-    # r14 (guide §1.2 per-task work): branch-free vote accumulation —
-    # a ±1 majority vote is equivalently 2·sum(bit) > n, so each of the
-    # 32 per-row aggregate inputs is a bare shift-and instead of a CASE
-    # (the bit-set decision moves to one post-aggregation expression
-    # per group).  Integer math, bit-identical (collect-compared over
-    # the full corpus; oracle-proved at 3 SFs); measured ~5% on the
-    # word-hash stage that dominates this operator.
-    sums = [
-        F.sum(F.shiftright(F.col("h"), b).bitwiseAND(1)).alias(f"s{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    agg = hashed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), *sums)
-    total = sum(
-        F.when(
-            2 * F.col(f"s{b}") > F.col("n"), F.lit(1).cast("long") * (1 << b)
-        ).otherwise(0)
-        for b in range(SIMHASH_BITS)
+    hashed = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS w").selectExpr(
+        "doc_id", "CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT) AS h"
     )
-    return agg.select("doc_id", total.alias("simhash"))
+    return hashed.groupBy("doc_id").agg(
+        F.expr(f"CAST({_simhash_total_sql()} AS BIGINT)").alias("simhash")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -982,8 +972,15 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return tiled.groupBy("label", "bi", "bj").applyInPandas(
-        block_pairs, "id_a long, id_b long, cos_sim double"
+    # an explicit hash repartition on the group keys: it is the Exchange
+    # the grouping needs anyway, but AQE leaves its partition count alone
+    # (it coalesced the ~1 MB tile shuffle into ONE task, so every group
+    # ran through one Python worker on one core)
+    par = spark.sparkContext.defaultParallelism
+    return (
+        tiled.repartition(par, "label", "bi", "bj")
+        .groupBy("label", "bi", "bj")
+        .applyInPandas(block_pairs, "id_a long, id_b long, cos_sim double")
     )
 
 

@@ -71,6 +71,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # Static: read once when the JVM's code generator starts.  The 18
+        # headline operators generate ~285 distinct classes; at Spark's
+        # default of 100 entries every warm rotation of them recompiled
+        # 207 classes in Janino (8-10 ms each).  1024 holds that working
+        # set with 3.5x headroom (README "Session defaults").
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # PySpark's call-site capture walks the Python stack and makes
+        # four py4j round trips per DataFrame/Column call; pyspark reads
+        # this flag once per process, so it only works at session build.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is not None:
         builder = builder.master(master)
@@ -121,6 +131,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     comparison sees one canonical type regardless of the file layout.
     """
     path = table_path(sf_dir, name)
+    build = lambda: spark.read.parquet(path)  # noqa: E731
     if name == "events":
         from pyspark.sql.types import LongType
 
@@ -129,24 +140,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             normalize_events_ts,
         )
 
-        # sniff the physical layout and set the legacy conf ONLY when the
-        # nanos layout needs it: flipping it unconditionally changed how
-        # every LATER parquet read of a TIMESTAMP(NANOS) column in this
-        # session decoded (raw longs instead of timestamps)
-        _, ts_is_long = _events_raw_schema(sf_dir)
-        if ts_is_long:
+        layout = lambda: _events_raw_schema(sf_dir)[1]  # noqa: E731
+        if artifacts.get(spark, ("events_ts_is_long", path), layout, [path]):
+            # The nanos layout is rebuilt per call: its loader conditions
+            # a session conf (nanosAsLong) that streaming runners restore
+            # afterwards.  The conf is set ONLY for this layout: flipping
+            # it unconditionally changed how every LATER parquet read of
+            # a TIMESTAMP(NANOS) column in this session decoded (raw
+            # longs instead of timestamps).
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        return normalize_events_ts(
-            df, isinstance(df.schema["ts"].dataType, LongType)
-        )
-    # Every other handle is an artifact.  A DataFrame is a PLAN, not data:
-    # reuse skips re-resolving the source and re-reading the parquet footer
-    # (~0.1-0.3s per table per call — r13 measured), while every EXECUTION
-    # still scans the file.  The events plan above is rebuilt per call: its
-    # loader conditions a session conf (nanosAsLong) that streaming runners
-    # restore afterwards.
-    build = lambda: spark.read.parquet(path)  # noqa: E731
+            df = spark.read.parquet(path)
+            return normalize_events_ts(
+                df, isinstance(df.schema["ts"].dataType, LongType)
+            )
+        build = lambda: normalize_events_ts(spark.read.parquet(path), False)  # noqa: E731
+    # Every handle but the nanos events one is an artifact.  A DataFrame is
+    # a PLAN, not data: reuse skips re-resolving the source and re-reading
+    # the parquet footer (~0.1-0.3s per table per call — r13 measured),
+    # while every EXECUTION still scans the file.
     return artifacts.get(spark, ("table", path), build, [path])
 
 

@@ -224,7 +224,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @contextmanager
-def stream_partitions(spark: SparkSession, n: int = 8):
+def stream_partitions(spark: SparkSession, n: int | None = None):
     """Pin the state-store partition count for the duration of a bounded
     streaming run (restored after): a streaming aggregation or join
     inherits ``spark.sql.shuffle.partitions`` as its FIXED number of
@@ -234,7 +234,13 @@ def stream_partitions(spark: SparkSession, n: int = 8):
     sf0.01).  On a real cluster you size this to the state volume ONCE
     at stream start — which is exactly what this does; batch queries in
     the same session are unaffected (conf restored, and AQE coalesces
-    batch shuffles anyway)."""
+    batch shuffles anyway).
+
+    The default is 8, or fewer when the session has fewer cores: the
+    state tasks then run in one wave (on 4 cores, 8 state tasks took two
+    waves and q_stream_tumbling 0.91 s against 0.75 s with 4)."""
+    if n is None:
+        n = min(8, spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

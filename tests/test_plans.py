@@ -607,6 +607,28 @@ def test_char_diversity_no_shuffle(spark):
     assert "Generate" not in plan, plan  # no explode at all
 
 
+def test_embedding_neardup_groups_run_on_every_core(spark):
+    """The (label, bi, bj) tile groups are hash-repartitioned to the
+    session's parallelism on their own keys: still the ONE exchange the
+    grouping needs, and AQE must not coalesce it (it folded the ~1 MB
+    tile shuffle into one task, so every group ran through one Python
+    worker)."""
+    import re
+
+    df = q("q_embedding_neardup", spark)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    par = spark.sparkContext.defaultParallelism
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", final)
+    assert len(exchanges) == 1, executed
+    kind, args = exchanges[0]
+    assert kind == "hashpartitioning", executed
+    keys = [a.strip().split("#")[0] for a in args.split(",")]
+    assert keys == ["label", "bi", "bj", str(par)], executed
+    assert "AQEShuffleRead" not in final, executed
+
+
 def test_asof_join_single_exchange_per_side_composite_keys(spark):
     """asof_join's union-sort plan (r8 composite-key support): ONE
     hash exchange on the full key tuple feeding ONE window sort — no

@@ -61,13 +61,39 @@ def test_table_handle_memo_returns_same_plan_not_same_data(spark):
     assert not a.storageLevel.useMemory and not a.storageLevel.useDisk
 
 
-def test_table_handle_memo_excludes_events(spark):
-    """The events loader sniffs the physical layout and conditions a
-    session conf (nanosAsLong) that streaming runners restore per call —
-    its plan must be rebuilt per invocation, never memoized."""
-    a = load_table(spark, SF_DIR, "events")
-    b = load_table(spark, SF_DIR, "events")
-    assert a is not b
+def test_table_handle_memo_excludes_nanos_events(spark, tmp_path):
+    """In the INT64-nanos layout the events loader conditions a session
+    conf (nanosAsLong) that streaming runners restore per call — its
+    plan must be rebuilt per invocation, never memoized.  (The micros
+    layout conditions nothing and is an artifact: tests/test_artifacts.py.)"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key)
+    t0 = 1_700_000_000_000_000_000  # ns since epoch
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([t0, t0 + 60_000_000_000], pa.timestamp("ns")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": pa.array(["click"] * 2),
+            "value": pa.array([1.5, 2.25], pa.float64()),
+            "props": pa.array(["{}"] * 2),
+        }
+    )
+    # version 2.6 + no coercion => physical INT64 TIMESTAMP(NANOS)
+    pq.write_table(
+        table, str(tmp_path / "events.parquet"), coerce_timestamps=None, version="2.6"
+    )
+    try:
+        a = load_table(spark, str(tmp_path), "events")
+        b = load_table(spark, str(tmp_path), "events")
+        assert a is not b
+        assert dict(b.dtypes)["ts"] == "timestamp"
+        assert b.count() == 2
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_dup_labels_matches_clusters_labels(spark):
