@@ -23,6 +23,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+# the scale-factor directory read when SPARK_GRAFT_SF_DIR is unset
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -185,21 +188,25 @@ def bench_datagen(spark) -> float:
     return elapsed
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # basename may be any name — only 'sf<number>' encodes a scale factor;
-    # anything else falls back instead of crashing before the first query
-    # (review r7: float('full') raised at startup, recording no bench;
-    # ADVICE r7: [\d.]+ still matched float-rejecting spellings like
-    # 'sf.' or 'sf1.2.3' — anchor the pattern to a valid number instead)
-    m = re.search(r"sf(\d+(?:\.\d+)?)$", os.path.basename(sf_dir.rstrip("/")))
-    sf = float(m.group(1)) if m else 0.1
+def warm_session(app_name: str, sf_dir: str):
+    """The tuned session every timing script measures in, warmed up.
 
-    # Host-disk latency on this box is wildly variable (the same bench has
-    # measured 25s and 133s on identical code); the bench compares QUERY
-    # PLANS round-over-round, so take the disk out of the picture: scratch
-    # space (spark shuffle dirs, MoR table sinks, stream checkpoints — all
-    # created via tempfile) lives on tmpfs for the bench process only.
+    Scratch space (spark shuffle dirs, MoR table sinks, stream
+    checkpoints — all created via tempfile) moves to tmpfs for this
+    process only: host-disk latency varies widely (the same bench has
+    measured 25s and 133s on identical code), and the timings compare
+    query plans, not disks.  Three warm-ups then pay one-time startup
+    costs before anything is timed: a JVM query (codegen and scan), a
+    tiny mapInPandas (Python worker pool and Arrow serializer — workers
+    are reused after) and a streaming query at the smallest SF
+    (state store and sink).  One cache clear drops the warm-up's
+    leftovers; after it, session caches PERSIST across queries, so the
+    first pass pays artifact builds (quantizers, minhash signatures,
+    the normalized corpus, the brute-force ground truth) and later
+    passes probe them — the train-once-probe-many posture those
+    operators are built for.  Per-call cache leaks are handled at the
+    source: unpersist in the audits and the artifact cache (README
+    "Artifact cache"), which unpersists what it drops."""
     import tempfile
 
     if os.path.isdir("/dev/shm"):
@@ -213,14 +220,11 @@ def main() -> None:
 
     operators.load_all()
     spark = get_spark(
-        "bench",
+        app_name,
         extra_conf={"spark.local.dir": os.environ.get("TMPDIR", "/tmp")},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up passes so one-time startup costs don't pollute measurements:
-    # a JVM query (codegen/scan warmup) and a tiny mapInPandas (Python
-    # worker pool + Arrow serializer warmup — workers are reused after)
     operators.QUERIES["q6_forecast_revenue"](spark, sf_dir).write.format(
         "noop"
     ).mode("overwrite").save()
@@ -231,42 +235,39 @@ def main() -> None:
     spark.range(32).mapInPandas(_noop_batches, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
-    # streaming engine warmup at the smallest SF (state-store + sink init)
     operators.QUERIES["q_stream_tumbling"](spark, "/root/testdata/sf0.001").count()
+    spark.catalog.clearCache()
+    return spark
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    # basename may be any name — only 'sf<number>' encodes a scale factor;
+    # anything else falls back instead of crashing before the first query
+    # (review r7: float('full') raised at startup, recording no bench;
+    # ADVICE r7: [\d.]+ still matched float-rejecting spellings like
+    # 'sf.' or 'sf1.2.3' — anchor the pattern to a valid number instead)
+    m = re.search(r"sf(\d+(?:\.\d+)?)$", os.path.basename(sf_dir.rstrip("/")))
+    sf = float(m.group(1)) if m else 0.1
+
+    from iceberg_data_gen_spark import operators
+
+    spark = warm_session("bench", sf_dir)
 
     def run_once(fn) -> float:
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    # One cache clear BEFORE the measured passes (warmup leftovers), then
-    # caches PERSIST across queries (r9; the r6 per-query clearCache is
-    # gone): the ANN/dedup family deliberately trains and caches
-    # per-(session, corpus) artifacts — quantizers, minhash signatures,
-    # the normalized corpus, the brute-force ground truth — and the
-    # production posture for those operators is train-once-probe-many.
-    # With per-query clearing, every invocation re-paid materialization
-    # and the bench could never see the steady state VERDICT r8 #3 asks
-    # it to measure.  Pass 1 is therefore the COLD number and pass 2 the
-    # WARM one; min() reports steady-state.  Per-call cache leaks (the
-    # hazard the r6 clear guarded against) are handled at the source:
-    # review-enforced unpersist in the audits and the artifact cache
-    # (README "Artifact cache"), which unpersists what it drops.
-    spark.catalog.clearCache()
-
     # TWO INTERLEAVED full passes, min per query.  This host stalls in
     # multi-minute bursts (the same bench has measured 25s and 133s on
     # identical code, with one contiguous window of queries 10-20x slow);
     # back-to-back repeats land both samples inside one burst, while
     # pass-separated samples are minutes apart — at most one is hit.
-    # Per-pass timings are RECORDED SEPARATELY (VERDICT r10 #1 "what's
-    # wrong"): driver-side totals rose three rounds straight while the
-    # same-code builder band stayed flat, and adjudicating "stalled cold
-    # pass vs warm-plan regression" took three files and a judge.  With
-    # {cold, warm} in the JSON itself, a host-stall burst shows up as an
-    # inflated `cold` with `warm` inside its pinned budget (README
-    # "Bench variance"), while a genuine plan regression inflates `warm`
-    # — self-adjudicating from BENCH_r{N}.json alone.
+    # Per-pass timings are recorded separately: a host-stall burst shows
+    # up as an inflated `cold` with `warm` inside its pinned budget
+    # (README "Performance notes"), while a genuine plan regression
+    # inflates `warm`.
     def host_ref() -> float:
         """Fixed-work single-core reference (sha256 over 192 MB of
         zeros): a pure-CPU constant that prices THIS HOST's speed into
@@ -512,28 +513,13 @@ def _emit_detail(
 # official headline.  1,800 leaves slack for the driver's own framing.
 MAX_FINAL_LINE = 1800
 
-# Host-proof warm budgets (README "Round 12 made the budgets
-# host-proof"): each value bounds the query's WARM time divided by the
-# same run's HEADLINE warm median.  Ratios ride the host window with
-# the query (r12: ratio spread ±0.15 across runs whose absolutes
-# spread ±25%), so a breach is a plan regression, not host drift.
-# (History: r13's optimization pass halved the median and re-pinned
-# everything from a two-regime pool — one scalar pin sized to span
-# both core counts, see the r13 block in the git history of this
-# file and README "Round-13 re-pin".)
-# RE-PINNED a second time (r14 optimization round 2): this round's
-# plan changes dropped the query-only warm median again (~0.50-0.63 s
-# vs the r13 pool's 0.64-0.93 s), so every unchanged entry's ratio
-# inflated ~25-30% and several r13 pins went stale in BOTH directions
-# (q_dedup_survivors fell from ratio ~3 to ~0.3 — its 5.6 pin would
-# have been pure silent-regression headroom; q_value_outliers_mad's
-# 1.8 false-fired on an unchanged plan).  Pool + rules:
-# scripts/r14_repin.py over plans/r14/bench_run_{1,3,4}_32core.json —
-# pins are now calibrated TIGHT at the ≥16-core regime only (ADVICE
-# r13), with one-pass stall samples excluded mechanically (warm ratio
-# > 2× a clean cold twin); lower-core runs multiply every pin by
-# LOW_CORE_RATIO_MULT below instead of widening the whole table to the
-# slowest regime.
+# Warm-ratio budgets (README "Performance notes"): each value bounds a
+# query's WARM time divided by the same run's query-only headline warm
+# median, so a host-wide slowdown moves numerator and denominator
+# together and a breach is a plan regression, not host drift.  Pins
+# are calibrated at >=16 cores; runs below LOW_CORE_REGIME_BELOW cores
+# multiply every pin by LOW_CORE_RATIO_MULT.  The calibration runs are
+# in the git history at commit e2f28d8.
 WARM_RATIO_BUDGETS = {
     "q_bucketed_join": 4.8,
     "q_ngram_jaccard_pairs": 3.8,
@@ -565,49 +551,10 @@ WARM_RATIO_BUDGETS = {
     "q_dedup_incremental": 1.1,
 }
 
-# Cold-pass ratio pins for breach adjudication (ADVICE r12): the
-# `both_passes` verdict compares the COLD ratio (cold time ÷ same-run
-# query-only cold median), and cold passes systematically carry
-# first-pass overhead — trainer/cache materialization puts e.g.
-# q_dedup_survivors at cold ratio ~5 while its warm ratio sits at ~3.4.
-# Judging cold ratios against the warm pins would read every genuine
-# warm regression on a cache-heavy query as `both_passes: false`
-# ("re-run, not revert").  Same keyset as WARM_RATIO_BUDGETS
-# (test-asserted); pool = r12 driver run + three r13 same-code runs,
-# pin = max cold ratio + ~30% (cold ratio = first-pass time ÷ same-run
-# query-only cold median).
-# r13 re-pin rule for cold: pin = max(old pin, post-change pool max ×
-# 1.3) — cold pins adjudicate `both_passes` ("confirmed regression" vs
-# "re-run"), so the safer error is UNDER-confirmation (ADVICE r12: a
-# reproduced warm-only breach still counts); pins only ever loosened
-# where the pool (incl. the two 8-core regime runs, e.g. q1 cold 2.59
-# at 8 cores) demanded it, never tightened past r12 evidence.
-# datagen_2m_rows_mor's host_ref-normalized pins (r14, VERDICT r13 #6) —
-# warm/cold seconds ÷ the same pass's host_ref seconds; see the
-# derivation comment at the breach computation in _emit_detail.
-DATAGEN_HOSTREF_BUDGET = {"warm": 14.0, "cold": 19.0}
-
-# Regime-keyed budget selection (ADVICE r13): ratios are not
-# core-count-invariant — at low core counts the heavy entries rise
-# against the (overhead-dominated) median, and the r13 fix of folding
-# both regimes into ONE scalar pin meant a genuine ~1.5-2× 32-core
-# regression could clear a pin sized for the 8-core regime.  The
-# tables above are now pinned TIGHT from the high-parallelism
-# (≥16-core) pool alone; runs at lower core counts — the driver's
-# scaling leg — multiply every pin by LOW_CORE_RATIO_MULT (derived in
-# scripts/r14_repin.py from the committed 8-core runs: max per-entry
-# 8-core/32-core-pin divergence, cushioned).
-LOW_CORE_REGIME_BELOW = 16
-# shipped at the r13 cross-regime widening factor (~1.3-1.5× across
-# its 8-core probe runs); the one clean r14 8-core run needed only
-# 1.0× against the new pins (scripts/r14_repin.py prints the
-# measurement) but one run is thinner evidence than r13's regime study
-LOW_CORE_RATIO_MULT = 1.4
-
-
-def _budget_mult(parallelism: int) -> float:
-    return 1.0 if parallelism >= LOW_CORE_REGIME_BELOW else LOW_CORE_RATIO_MULT
-
+# Cold-pass ratio pins (cold time over the same run's query-only cold
+# median) adjudicate `both_passes`: cold passes carry first-pass
+# artifact builds, so they are judged against their own band.  Same
+# keyset as WARM_RATIO_BUDGETS (test-asserted).
 COLD_RATIO_BUDGETS = {
     "q3_shipping_priority": 2.5,
     "q5_local_supplier_volume": 1.8,
@@ -638,6 +585,17 @@ COLD_RATIO_BUDGETS = {
     "q_tfidf_top_terms": 1.4,
     "q_repetition_score": 1.0,
 }
+
+# datagen_2m_rows_mor is disk-bound and excluded from both medians; its
+# pins divide its seconds by the same pass's host_ref seconds instead.
+DATAGEN_HOSTREF_BUDGET = {"warm": 14.0, "cold": 19.0}
+
+LOW_CORE_REGIME_BELOW = 16
+LOW_CORE_RATIO_MULT = 1.4
+
+
+def _budget_mult(parallelism: int) -> float:
+    return 1.0 if parallelism >= LOW_CORE_REGIME_BELOW else LOW_CORE_RATIO_MULT
 
 
 def _median(xs: list[float]) -> float:

@@ -932,8 +932,7 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans was TRIED and measured a ~7% regression in an interleaved
     A/B (no-spread 0.863s vs spread 0.927s min-of-5, sf0.1/local[32])
     — percentile's partial aggregate is too light per row for the
-    added exchange to pay, the r13 light-extras rule again
-    (OPTIMIZATION_r14.md).  The single-task scan stages remain by
+    added exchange to pay.  The single-task scan stages remain by
     input layout; at healthy layouts they parallelize on their own."""
     ev = _events(spark, sf_dir)
     med = ev.groupBy("event_type").agg(

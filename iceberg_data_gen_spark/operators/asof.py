@@ -132,8 +132,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     already resolves equal-timestamp right rows to the max o_orderkey,
     which IS that dedup (the tie dimension of the as-of fuzz family
     pins this equivalence).  Dropping the groupBy removes one full
-    Exchange + aggregate of the orders side: 3 exchanges → 2
-    (plans/r13/q_asof_join_{before,after}.txt)."""
+    Exchange + aggregate of the orders side: 3 exchanges → 2."""
     t = load_tables(spark, sf_dir, ("orders", "events"))
     orders = t["orders"].select("o_custkey", "o_orderdate", "o_orderkey")
     out = asof_join(

@@ -65,7 +65,7 @@ def spread_scan(df: DataFrame, sf_dir: str, name: str, key: str) -> DataFrame:
     Only exactness-safe consumers may call this: repartitioning reorders
     rows, so downstream aggregation must be order-insensitive at the bit
     level (integer/decimal/min/max/count, or the repo's dsum /
-    sorted-fold forms).  Callers are listed in OPTIMIZATION_r13.md.
+    sorted-fold forms).  Each caller's aggregation is one of these.
 
     The trigger is BADLY under-parallel, not marginally (ADVICE r13):
     a production table whose scan yields slightly fewer splits than

@@ -55,10 +55,9 @@ CC_DRIVER_MAX_EDGES = 2_000_000  # union-find shortcut cap (~32 MB of pairs)
 # every driver/oracle comparison keeps the bit-exact quadratic path,
 # and 2× headroom keeps it there if testdata doubles.  Past 10k no
 # oracle runs and the measured ~95×-and-growing win makes LSH+confirm
-# the only sane default.  IDG_DEDUP_LSH=1 forces the LSH path at any
-# scale (tests / scale probes).
+# the only sane default.  Tests and scale probes force the LSH path at
+# any scale by lowering this constant.
 DEDUP_LSH_MIN_DOCS = 10_000
-DEDUP_LSH_ENV = "IDG_DEDUP_LSH"
 # Clique cap for the cluster chain's CONFIRM-FILTERED candidates: the
 # downstream exact-Jaccard filter drops star edges whose member↔bmin
 # score dips below threshold (splitting clusters), so this path affords
@@ -995,7 +994,7 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``<= DEDUP_LSH_MIN_DOCS`` documents (every driver-checked SF):
       exact blocked-Jaccard (`q_jaccard_pairs`) — oracle-parity, the
       quadratic confined to language×size-band blocks.
-    * above it, or under ``IDG_DEDUP_LSH=1``: WORD-level MinHash-LSH
+    * above it: WORD-level MinHash-LSH
       candidates (``minhash_signatures(n=1)`` — unigram shingles, i.e.
       the very word sets the confirm step measures, so band recall at
       J=0.9 is 1-(1-0.9^4)^8 ≈ 0.9998; linear in corpus size,
@@ -1038,18 +1037,12 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_branch(spark: SparkSession, sf_dir: str) -> str:
     """Which pair source the cluster → survivor chain uses for this
     corpus: ``"exact"`` (blocked exact Jaccard, oracle-parity) below
-    ``DEDUP_LSH_MIN_DOCS`` documents, ``"lsh"`` above it or under
-    ``IDG_DEDUP_LSH=1``.  Factored out of ``_dup_edges`` (r14) because
-    the label memo must be keyed by the branch actually taken: the test
-    suite flips the env var within one session and the two branches'
-    label sets may legitimately differ (LSH recall < 1 can split
-    borderline clusters).  The doc count is an artifact; under a
-    forced LSH path the count is irrelevant and is short-circuited
-    BEFORE paying the scan (ADVICE r6)."""
-    import os
-
-    if os.environ.get(DEDUP_LSH_ENV) == "1":
-        return "lsh"
+    ``DEDUP_LSH_MIN_DOCS`` documents, ``"lsh"`` above it.  Factored out
+    of ``_dup_edges`` because the label memo must be keyed by the branch
+    actually taken: the test suite lowers the threshold within one
+    session and the two branches' label sets may legitimately differ
+    (LSH recall < 1 can split borderline clusters).  The doc count is
+    an artifact."""
     return "exact" if _doc_count(spark, sf_dir) <= DEDUP_LSH_MIN_DOCS else "lsh"
 
 
@@ -1139,9 +1132,9 @@ def _dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture as the minhash signature cache: the dup-graph labels are the
     dedup family's trained artifact, the first invocation in a session
     pays the build, and every consumer probes it.  The key carries the
-    branch actually taken (``_dedup_branch``) because IDG_DEDUP_LSH can
-    flip between calls in one session and the two branches' label sets
-    legitimately differ.  The labels themselves are tiny (dup-graph
+    branch actually taken (``_dedup_branch``) because the threshold can
+    change between calls in one session and the two branches' label
+    sets legitimately differ.  The labels themselves are tiny (dup-graph
     nodes only: bounded by the pair list, a sliver of the corpus)."""
     branch = _dedup_branch(spark, sf_dir)
     build = lambda: _dup_labels_build(spark, sf_dir)  # noqa: E731

@@ -368,18 +368,16 @@ IVF_MAX_CENTROIDS = 65536
 # O(sqrt(k)) where a flat quantizer is O(k).  At the 65536² ≈ 4.3e9-cell
 # ceiling the broadcast is 2 × 65536 × 32 doubles ≈ 33 MB — the same
 # bound the flat path respects, now covering ~17.6e12 vectors at target
-# occupancy.  Forced on at any scale via IDG_IVF_TWO_LEVEL=1 (tests /
-# scale probes).
-IVF_TWO_LEVEL_ENV = "IDG_IVF_TWO_LEVEL"
+# occupancy.  Tests and scale probes force it on at any scale by
+# lowering _TWO_LEVEL_MIN_N.  n <= _TWO_LEVEL_MIN_N holds exactly when
+# the wanted flat k (_ivf_want) fits under IVF_MAX_CENTROIDS.
 _TWO_LEVEL_MIN_N = IVF_MAX_CENTROIDS * IVF_TARGET_ROWS_PER_CELL
 
 
 def _ivf_want(n_vectors: int) -> int:
     """Uncapped cell count ``ceil(n / target-occupancy)`` — ONE
-    definition shared by ``_ivf_k`` and the flat/two-level switch in
-    ``_corpus_centroids`` (review r10: the same ceil was computed in
-    both places, so an occupancy-formula change in one would silently
-    diverge the switch threshold from the flat k)."""
+    definition shared by ``_ivf_k`` and the two-level codebook size in
+    ``_corpus_centroids``."""
     import math
 
     return math.ceil(max(n_vectors, 1) / IVF_TARGET_ROWS_PER_CELL)
@@ -498,18 +496,15 @@ def _corpus_centroids(e: DataFrame, sf_dir: str):
 
     Returns ``(assign, probe, k)`` closures (see ``_flat_quantizer``).
     Up to ``_TWO_LEVEL_MIN_N`` vectors the quantizer is a flat k-means
-    codebook; past it (or under ``IDG_IVF_TWO_LEVEL=1``) it is the
-    two-level inverted multi-index, which keeps BOTH the codebook
-    broadcast and the per-vector assign cost O(sqrt(k)) — the flat-k
-    ceiling no longer forces occupancy to grow with the corpus."""
+    codebook; past it it is the two-level inverted multi-index, which
+    keeps BOTH the codebook broadcast and the per-vector assign cost
+    O(sqrt(k)) — the flat-k ceiling no longer forces occupancy to grow
+    with the corpus."""
     import math
-    import os
 
     spark = e.sparkSession
     n = _vector_count(spark, sf_dir)
-    want = _ivf_want(n)
-    forced = os.environ.get(IVF_TWO_LEVEL_ENV) == "1"
-    if want <= IVF_MAX_CENTROIDS and not forced:
+    if n <= _TWO_LEVEL_MIN_N:
         k = _ivf_k(n)
         C = table_artifact(
             spark, sf_dir, "embeddings", ("ivf", k, IVF_KMEANS_ITERS),
@@ -519,7 +514,7 @@ def _corpus_centroids(e: DataFrame, sf_dir: str):
     # two-level: each half-codebook holds ~sqrt(k_wanted) centroids (floor
     # 4 so forced tiny-corpus runs keep the recall-asserted 16-cell
     # geometry; cap 65536 per half = the same 33 MB broadcast bound)
-    k1 = min(IVF_MAX_CENTROIDS, max(4, math.ceil(math.sqrt(want))))
+    k1 = min(IVF_MAX_CENTROIDS, max(4, math.ceil(math.sqrt(_ivf_want(n)))))
     h = DIM // 2
     C1 = table_artifact(
         spark, sf_dir, "embeddings", ("imi1", k1, IVF_KMEANS_ITERS),

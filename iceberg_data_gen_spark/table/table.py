@@ -2159,6 +2159,14 @@ class MoRTable:
         main.rs:334-345 derives and never scans), clamped at zero instead
         of going negative — H4.
 
+        ``derived_total`` subtracts delete RECORDS, so it is exact only
+        when each record removes one live row that no other record
+        removes: position deletes name distinct (file, pos) pairs and
+        each equality-delete row matches exactly one older row, as the
+        generator's deletes do.  A repeated (file, pos), an equality key
+        matching zero or several rows, or two deletes of one row make it
+        differ from the scan; the scan itself stays exact.
+
         ``measure=True`` additionally runs the full MoR ``scan().count()``
         and reports ``measured_total``.  Off by default: at 100 TB a
         summary must not cost two anti-joins over the whole table; tests

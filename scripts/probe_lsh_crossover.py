@@ -21,7 +21,6 @@ the quadratic term dominates long before 1M).
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from pathlib import Path
@@ -106,33 +105,29 @@ def main() -> int:
         make_corpus(warm, 300)
         seed_doc_count(str(warm), 300)
         saved = dedup.DEDUP_LSH_MIN_DOCS
-        dedup.DEDUP_LSH_MIN_DOCS = 10**12
-        dedup._dup_edges(spark, str(warm)).count()
+        for threshold in (10**12, 0):  # exact branch, then LSH
+            dedup.DEDUP_LSH_MIN_DOCS = threshold
+            dedup._dup_edges(spark, str(warm)).count()
         dedup.DEDUP_LSH_MIN_DOCS = saved
-        os.environ[dedup.DEDUP_LSH_ENV] = "1"
-        dedup._dup_edges(spark, str(warm)).count()
-        os.environ.pop(dedup.DEDUP_LSH_ENV, None)
 
         for n in sizes:
             d = Path(td) / f"n{n}"
             make_corpus(d, n)
             sf_dir = str(d)
 
-            os.environ.pop(dedup.DEDUP_LSH_ENV, None)
             seed_doc_count(sf_dir, n)
-            # force exact by lifting the threshold for this invocation
+            # force each branch by moving the threshold for one invocation
             saved = dedup.DEDUP_LSH_MIN_DOCS
             dedup.DEDUP_LSH_MIN_DOCS = 10**12
             t0 = time.monotonic()
             n_exact = dedup._dup_edges(spark, sf_dir).count()
             t_exact = time.monotonic() - t0
-            dedup.DEDUP_LSH_MIN_DOCS = saved
 
-            os.environ[dedup.DEDUP_LSH_ENV] = "1"
+            dedup.DEDUP_LSH_MIN_DOCS = 0
             t0 = time.monotonic()
             n_lsh = dedup._dup_edges(spark, sf_dir).count()
             t_lsh = time.monotonic() - t0
-            os.environ.pop(dedup.DEDUP_LSH_ENV, None)
+            dedup.DEDUP_LSH_MIN_DOCS = saved
 
             recall = n_lsh / n_exact if n_exact else float("nan")
             rows.append((n, t_exact, t_lsh, n_exact, n_lsh, recall))

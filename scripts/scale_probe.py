@@ -120,18 +120,19 @@ PROBE = [
 # the identical aggregations into a distributed discard sink.
 STREAM_PROBE = ["q_stream_session", "q_stream_stateful", "q_stream_stateful_ttl"]
 
-# (label, query, env) probes that force a scale-path branch: the forced
-# env var is set for the timing and removed after.  These are the
-# branches whose whole POINT is the large-corpus ratio — the default
-# branch at probe scale would measure the small-corpus path instead.
-ENV_PROBE = [
+# (label, query, module, threshold) probes that force a scale-path
+# branch: the module's size threshold is set to 0 for the timing and
+# restored after.  These are the branches whose whole POINT is the
+# large-corpus ratio — the default branch at probe scale would measure
+# the small-corpus path instead.
+FORCED_PROBE = [
     # LSH candidates -> exact-confirm -> union-find: the survivors chain
     # must track the LSH ratio, not the blocked-quadratic one
-    ("q_dedup_survivors[lsh]", "q_dedup_survivors", "IDG_DEDUP_LSH"),
+    ("q_dedup_survivors[lsh]", "q_dedup_survivors", "dedup", "DEDUP_LSH_MIN_DOCS"),
     # two-level (inverted multi-index) coarse quantizer: bounded assign
     # cost past the flat-k cap
-    ("q_ann_ivf[2level]", "q_ann_ivf", "IDG_IVF_TWO_LEVEL"),
-    ("q_semdedup[2level]", "q_semdedup", "IDG_IVF_TWO_LEVEL"),
+    ("q_ann_ivf[2level]", "q_ann_ivf", "similarity", "_TWO_LEVEL_MIN_N"),
+    ("q_semdedup[2level]", "q_semdedup", "similarity", "_TWO_LEVEL_MIN_N"),
 ]
 
 
@@ -211,7 +212,7 @@ def main() -> None:
     known = (
         set(PROBE)
         | set(stream_labels.values())
-        | {label for label, _, _ in ENV_PROBE}
+        | {label for label, *_ in FORCED_PROBE}
     )
     unknown = set(sys.argv[1:]) - known
     if unknown:
@@ -289,14 +290,18 @@ def main() -> None:
             continue
         report[label] = probe_one(name, runner=run_stream)
         print(label, report[label], file=sys.stderr, flush=True)
-    for label, name, env in ENV_PROBE:
+    import importlib
+
+    for label, name, module, threshold in FORCED_PROBE:
         if not wanted(label):
             continue
-        os.environ[env] = "1"
+        mod = importlib.import_module(f"iceberg_data_gen_spark.operators.{module}")
+        saved = getattr(mod, threshold)
+        setattr(mod, threshold, 0)
         try:
             report[label] = probe_one(name)
         finally:
-            os.environ.pop(env, None)
+            setattr(mod, threshold, saved)
         print(label, report[label], file=sys.stderr, flush=True)
     print(json.dumps({"factor": FACTOR, "src": SRC, "probe": report}))
 

@@ -173,3 +173,23 @@ def test_readme_budget_table_matches_bench_budgets():
          for k in cold_table
          if cold_table.get(k) != bench.COLD_RATIO_BUDGETS.get(k)},
     )
+
+
+def test_probe_tier_names_are_benched_queries():
+    """The heavy probe tier (bench detail file) may only time entries
+    the bench already runs — additions-only to the harness, and the
+    10× probe set must stay inside the recorded query universe."""
+    import bench
+
+    assert set(bench.PROBE_TIER) <= set(bench.HEADLINE) | set(bench.EXTRA)
+    assert bench.PROBE_FACTOR >= 2
+
+
+def test_datagen_hostref_budget_shape():
+    """datagen_2m_rows_mor's host_ref-normalized pins: cold carries
+    first-pass overhead so its pin must not be tighter than warm's."""
+    import bench
+
+    b = bench.DATAGEN_HOSTREF_BUDGET
+    assert set(b) == {"warm", "cold"}
+    assert b["cold"] >= b["warm"] > 0

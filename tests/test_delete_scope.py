@@ -459,3 +459,21 @@ def test_where_bounds_the_equality_deletes_read(spark, tmp_path):
         )
         _assert_exact(spark, t, kept, where={"bar": (lo, hi)})
     _assert_summary(t)
+
+
+def test_summary_derives_from_delete_records(spark, tmp_path):
+    """summary() keeps the reference's formula (data rows minus delete
+    records): a position-delete file naming one (file, pos) twice
+    derives one row fewer than the scan measures, and the scan itself
+    stays exact."""
+    t = _table(spark, tmp_path, "dup_pos")
+    snap = t.append_batches([_bars(spark, 0, 10), _bars(spark, 10, 20)])
+    a = snap["files"][0]["path"]
+    t.add_position_deletes(_pos_deletes(spark, a, [5, 2, 3, 3, 8]))
+    expected = _model(t)
+    assert sum(expected.values()) == 16
+    _assert_exact(spark, t, expected)
+    s = t.summary(measure=True)
+    assert s["pos_delete_rows"] == 5
+    assert s["measured_total"] == 16
+    assert s["derived_total"] == s["measured_total"] - 1

@@ -101,20 +101,21 @@ def test_minhash_signature_is_order_independent_and_perms_differ(spark):
 
 
 def test_lsh_fed_cluster_chain_matches_exact_path(spark, monkeypatch):
-    """IDG_DEDUP_LSH=1 forces the cluster/survivor chain onto its
+    """A zero DEDUP_LSH_MIN_DOCS forces the cluster/survivor chain onto its
     100 TB branch (word-level MinHash-LSH candidates → exact-Jaccard
     confirm → union-find).  The approximation is one-sided (a missed
     candidate can only SPLIT a cluster), so the exact path's survivors
     must be a subset of the LSH path's — and at the word-LSH band
     recall of ~0.9998 the chains should agree on ≥90% of merges
     (measured: identical at sf0.01).  VERDICT r5 #3."""
+    from iceberg_data_gen_spark.operators import dedup
+
     surv = operators.QUERIES["q_dedup_survivors"]
-    # an ambient IDG_DEDUP_LSH=1 (debug shell, CI matrix leg) would make
-    # the "exact" baseline take the LSH branch too, turning both asserts
-    # into tautologies (review r8)
-    monkeypatch.delenv("IDG_DEDUP_LSH", raising=False)
+    # both branches must really be taken, or exact <= lsh holds trivially
+    assert dedup._dedup_branch(spark, SF_DIR) == "exact"
     exact = {r.doc_id for r in surv(spark, SF_DIR).collect()}
-    monkeypatch.setenv("IDG_DEDUP_LSH", "1")
+    monkeypatch.setattr(dedup, "DEDUP_LSH_MIN_DOCS", 0)
+    assert dedup._dedup_branch(spark, SF_DIR) == "lsh"
     lsh = {r.doc_id for r in surv(spark, SF_DIR).collect()}
     assert exact <= lsh, "LSH branch merged docs the exact path does not"
     n_docs = operators.QUERIES["q_dedup_clusters"](spark, SF_DIR).count()
@@ -207,7 +208,7 @@ def test_media_table_partition_shape(spark):
     assert dtypes["meta"].startswith("struct<format:string,width:int,height:int,n_bytes:")
 
 
-def test_ann_ivf_recall_and_shape(spark, monkeypatch):
+def test_ann_ivf_recall_and_shape(spark):
     """IVF probes 4 of 16 k-means cells; recall@10 vs the exact baseline
     must beat the ~25% candidate-coverage floor with margin, and
     per-query results must be contiguously ranked.
@@ -218,9 +219,6 @@ def test_ann_ivf_recall_and_shape(spark, monkeypatch):
     The pre-k-means first-16 centroids scored ~0.5+ only because their
     skewed cells over-probed the big ones, i.e. scanned more of the
     corpus."""
-    # ambient IDG_IVF_TWO_LEVEL=1 would silently test the two-level path
-    # here instead of the flat one (review r8)
-    monkeypatch.delenv("IDG_IVF_TWO_LEVEL", raising=False)
     exact = operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR).collect()
     approx = operators.QUERIES["q_ann_ivf"](spark, SF_DIR).collect()
     exact_sets = {}
@@ -237,14 +235,22 @@ def test_ann_ivf_recall_and_shape(spark, monkeypatch):
 
 
 def test_two_level_quantizer_forced_recall_and_determinism(spark, monkeypatch):
-    """IDG_IVF_TWO_LEVEL=1 forces the inverted-multi-index coarse
+    """A zero _TWO_LEVEL_MIN_N forces the inverted-multi-index coarse
     quantizer (the >270M-vector path: two half-space codebooks whose
     cross product addresses k1*k2 cells with O(sqrt(k)) broadcast and
     assign cost).  Forced at test scale it must keep the recall floors
     of every _corpus_centroids consumer: IVF >= 0.35 (measured 0.48),
     IVF+PQ >= 0.2 (measured 0.36), SemDeDup full-coverage + kept rows —
     and stay deterministic across invocations (VERDICT r5 #2)."""
-    monkeypatch.setenv("IDG_IVF_TWO_LEVEL", "1")
+    from iceberg_data_gen_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_TWO_LEVEL_MIN_N", 0)
+    # record each two-level build, so a flat run cannot pass these floors
+    built = []
+    imi = similarity._imi_quantizer
+    monkeypatch.setattr(
+        similarity, "_imi_quantizer", lambda *a: built.append(1) or imi(*a)
+    )
     exact = operators.QUERIES["q_ann_bruteforce"](spark, SF_DIR).collect()
     exact_sets = {}
     for r in exact:
@@ -268,6 +274,8 @@ def test_two_level_quantizer_forced_recall_and_determinism(spark, monkeypatch):
     sd = operators.QUERIES["q_semdedup"](spark, SF_DIR).collect()
     assert len(sd) == 500  # every vector classified, none lost to cells
     assert 0 < sum(1 for r in sd if r.kept) < len(sd)
+    # ivf twice, ivfpq and semdedup each took the two-level quantizer
+    assert len(built) == 4, built
 
 
 def test_imi_quantizer_geometry():
