@@ -1,5 +1,5 @@
-"""Benchmark harness — the driver runs this per-round and records the
-JSON line against BASELINE.md.
+"""Benchmark harness: the last stdout line is the JSON record compared
+against BASELINE.md.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
@@ -7,8 +7,11 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) on
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
 
-Each query is forced through the noop sink (full computation, no driver
-collect) — the honest measure of executor-side work.
+Each query is forced through the noop sink (full computation, no
+collect to the Spark driver), which measures executor-side work.
+Per-pass timings, extras, warm ratios, ``host_ref_sec`` and the probe
+tier go to a detail file (``_detail_path``).  The script reports
+timings; it does not judge them.
 """
 
 from __future__ import annotations
@@ -101,18 +104,13 @@ EXTRA = [
 ]
 
 
-# ---------------------------------------------------------------------
-# Heavy probe tier (r14, VERDICT r13 #2 — additions only): at sf0.1 the
-# per-query warm times are 0.15-1.4 s and dominated by fixed per-query
-# overhead at ANY core count, so the official bench could no longer
-# DEMONSTRATE parallelism (every 8-vs-32-core ratio ≈ 1).  After the
-# main passes, the bench therefore also times a handful of CPU-heavy
-# entries on the 10× key-shifted synthetic corpus (scripts/
-# scale_probe.py's builder, cached in /tmp across invocations) and
-# records them in the DETAIL file — the headline line, timed passes,
-# and query set are untouched.  The driver's lower-core-count re-run
-# writes its own detail file, so the 8-vs-32 ratio is computable from
-# the two probe_tier blocks.  Opt out with SPARK_GRAFT_PROBE_TIER=0.
+# Heavy probe tier: at sf0.1 per-query warm times are dominated by fixed
+# per-query overhead at any core count, so they cannot show parallel
+# speedup.  After the main passes the bench also times these CPU-heavy
+# entries on the 10× key-shifted corpus (scripts/scale_probe.py's
+# builder, cached in /tmp across invocations) and records them in the
+# detail file only.  Two runs at different core counts give the scaling
+# ratio from their probe_tier blocks.
 PROBE_TIER = [
     "q1_pricing_summary",
     "q_simhash",
@@ -243,10 +241,8 @@ def warm_session(app_name: str, sf_dir: str):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     # basename may be any name — only 'sf<number>' encodes a scale factor;
-    # anything else falls back instead of crashing before the first query
-    # (review r7: float('full') raised at startup, recording no bench;
-    # ADVICE r7: [\d.]+ still matched float-rejecting spellings like
-    # 'sf.' or 'sf1.2.3' — anchor the pattern to a valid number instead)
+    # anything else ('full', 'sf.', 'sf1.2.3') falls back to 0.1 instead
+    # of raising before the first query
     m = re.search(r"sf(\d+(?:\.\d+)?)$", os.path.basename(sf_dir.rstrip("/")))
     sf = float(m.group(1)) if m else 0.1
 
@@ -264,20 +260,13 @@ def main() -> None:
     # identical code, with one contiguous window of queries 10-20x slow);
     # back-to-back repeats land both samples inside one burst, while
     # pass-separated samples are minutes apart — at most one is hit.
-    # Per-pass timings are recorded separately: a host-stall burst shows
-    # up as an inflated `cold` with `warm` inside its pinned budget
-    # (README "Performance notes"), while a genuine plan regression
-    # inflates `warm`.
+    # Per-pass timings are recorded separately in the detail file.
     def host_ref() -> float:
         """Fixed-work single-core reference (sha256 over 192 MB of
-        zeros): a pure-CPU constant that prices THIS HOST's speed into
-        the JSON itself.  r11: three same-code bench runs landed 25-35%
-        above the r10 band with the inflation uniform across UNTOUCHED
-        entries and every executed-plan lock green — a host-wide
-        slowdown that could previously only be argued from cross-round
-        archaeology.  With host_ref recorded per pass, a future judge
-        divides: query times up AND host_ref up by the same factor ⇒
-        environment; query times up with host_ref flat ⇒ code."""
+        zeros): a pure-CPU constant that prices this host's speed into
+        the record.  Query times up AND host_ref up by the same factor
+        ⇒ environment; query times up with host_ref flat ⇒ code, or a
+        scheduler/IO-side stall."""
         import hashlib
 
         blk = bytes(8 << 20)
@@ -295,52 +284,38 @@ def main() -> None:
         for name in HEADLINE:
             passes[i][name] = round(run_once(operators.QUERIES[name]), 3)
         passes[i]["datagen_2m_rows_mor"] = round(bench_datagen(spark), 3)
-        # round-2+ operators, timed but reported OUTSIDE the headline
-        # total so `value` stays comparable round-over-round
+        # timed but reported OUTSIDE the headline total, so `value`
+        # stays comparable across runs that add extras
         for name in EXTRA:
             extra_passes[i][name] = round(run_once(operators.QUERIES[name]), 3)
     cold, warm = passes
-    # `queries` stays min-of-passes — the steady-state number every prior
-    # round recorded, so `value` remains comparable across all rounds
+    # `queries` is min-of-passes: the steady-state number per entry
     timings = {n: min(cold[n], warm[n]) for n in cold}
     extra = {n: min(extra_passes[0][n], extra_passes[1][n]) for n in extra_passes[0]}
 
     total = round(sum(timings.values()), 3)
 
-    # The r10 final line measured 1,955 chars WITH extra_queries and the
-    # r11 one 5,722 WITH the passes block — the driver captures only a
-    # 2,000-char stdout tail, so r11's official record lost its headline
-    # (`BENCH_r11.json parsed: null`).  The detail (per-pass timings,
-    # extras, host_ref, warm ratios) therefore goes to a round-keyed
-    # side file + one EARLIER stdout line, and the LAST printed line is
-    # the compact r10-shaped record the driver can always hold.
-    # NOTHING from here to the final print may kill the process —
-    # losing the headline line is the BENCH_r11 failure mode this block
-    # exists to prevent, so detail CONSTRUCTION and the file write both
-    # sit under one deliberately broad catch (review r12: the
-    # OSError-only guard let any detail-side bug abort main() before
-    # the record printed).
-    # warm_median rides in the PARSED final record (VERDICT r12 #3): the
-    # official BENCH_r{N} series is then host-normalizable on its own —
-    # a judge reading 19.37 → 21.10 divides by the same-run warm median
-    # instead of reconstructing the host window from the detail file.
-    # Its computation sits under its own guard: the final print survives
-    # anything.
+    # Only a 2,000-char tail of stdout is kept, so the detail goes to a
+    # side file plus one EARLIER stdout line, and the LAST printed line
+    # is the compact record (see MAX_FINAL_LINE).  Nothing from here to
+    # the final print may kill the process: warm_median, the probe tier
+    # and the detail file each sit under their own broad guard.
+    # warm_median rides in the final record so the recorded series can
+    # be host-normalized on its own.
     try:
         warm_med = _query_warm_median(warm)
     except Exception:  # noqa: BLE001 — headline must survive
         warm_med = None
 
-    # heavy probe tier LAST among measurements (r14): it runs on its own
-    # 10× corpus after every timed pass, so it cannot perturb the
-    # numbers above; its own guard keeps a probe-side failure (corpus
-    # build, OOM at 10×) from costing the round's headline record.
+    # heavy probe tier LAST among measurements: it runs on its own 10×
+    # corpus after every timed pass, so it cannot perturb the numbers
+    # above; its own guard keeps a probe-side failure (corpus build, OOM
+    # at 10×) from costing the headline record.
     probe = None
-    if os.environ.get("SPARK_GRAFT_PROBE_TIER") != "0":
-        try:
-            probe = _probe_tier(spark, sf_dir)
-        except Exception as exc:  # noqa: BLE001 — headline must survive
-            print(f"probe_tier: failed ({exc})")
+    try:
+        probe = _probe_tier(spark, sf_dir)
+    except Exception as exc:  # noqa: BLE001 — headline must survive
+        print(f"probe_tier: failed ({exc})")
 
     try:
         _emit_detail(
@@ -371,24 +346,15 @@ def main() -> None:
 
 
 def _query_warm_median(warm: dict) -> float:
-    """QUERY-ONLY warm median — the warm-ratio denominator (review r12):
+    """QUERY-ONLY warm median, the warm-ratio denominator:
     datagen_2m_rows_mor is the one disk-bound pipeline entry and its
-    position relative to the query median moves run-to-run — including
-    it lifted the denominator 16% on one run and would have silently
-    swallowed a q5 ratio breach.  Floor guards a smoke corpus whose warm
-    times all round to 0.000."""
+    position relative to the query median moves run-to-run, so it is
+    left out.  The floor guards a smoke corpus whose warm times all
+    round to 0.000."""
     return max(
         _median([t for n, t in warm.items() if n != "datagen_2m_rows_mor"]),
         0.001,
     )
-
-
-def _cold_time(n, cold, extra_passes) -> float:
-    """First-pass timing for *n*, headline or extra.  Explicit membership,
-    not truthiness (ADVICE r12): a legitimate 0.0 cold timing — the
-    smoke-corpus case the 0.001 median floor anticipates — must not fall
-    through to extra_passes and KeyError away the whole detail file."""
-    return cold[n] if n in cold else extra_passes[0][n]
 
 
 def _emit_detail(
@@ -407,11 +373,6 @@ def _emit_detail(
     the compact final line from printing."""
     if warm_med is None:
         warm_med = _query_warm_median(warm)
-    mult = _budget_mult(parallelism)
-    cold_med = max(
-        _median([t for n, t in cold.items() if n != "datagen_2m_rows_mor"]),
-        0.001,
-    )
     detail = {
         "extra_queries": extra,
         "passes": {
@@ -422,84 +383,22 @@ def _emit_detail(
             "extra_cold": extra_passes[0],
             "extra_warm": extra_passes[1],
             # fixed-work CPU constant per pass (see host_ref): divides
-            # CPU-frequency slowdown out of cross-round comparisons
+            # CPU-frequency slowdown out of run-to-run comparisons
             "host_ref_sec": host_refs,
-            # host-proof drift rule (VERDICT r11 #2): per-query warm
-            # time as a RATIO to the same-run suite-wide warm median —
-            # both numerator and denominator ride the same host window,
-            # so the README budgets compare ratios, not absolutes
+            # per-query warm time over the same run's query-only warm
+            # median: numerator and denominator ride the same host
+            # window.  Extras share the headline median as denominator.
             "warm_median_sec": warm_med,
             "warm_ratio": {
                 n: round(t / warm_med, 3) for n, t in warm.items()
             },
-            # extras share the headline suite's median as denominator so
-            # one reference prices the whole run's host window
             "extra_warm_ratio": {
                 n: round(t / warm_med, 3) for n, t in extra_passes[1].items()
             },
-            # self-adjudicating breach report: any budgeted entry whose
-            # warm ratio exceeds its pin (README ratio-budget table) —
-            # empty means no plan regression regardless of host state.
-            # Each breach carries BOTH passes' ratios (r12 run 6: an
-            # IO-sided host burst inflated streaming/MoR entries 3-8×
-            # in ONE pass while CPU entries barely moved — a suite-wide
-            # median can't normalize heterogeneous degradation).  A
-            # genuine plan regression inflates both passes; a stall
-            # inflates one — `both_passes` makes that call mechanical,
-            # and a one-pass breach means re-run, not revert.
-            "ratio_breaches": {
-                n: {
-                    "warm": round(t / warm_med, 3),
-                    "cold": round(
-                        _cold_time(n, cold, extra_passes) / cold_med, 3
-                    ),
-                    # the cold ratio is judged against its OWN pinned
-                    # band (ADVICE r12): cold times carry first-pass
-                    # overhead (cache/trainer materialization), so cold
-                    # ratios sit systematically above warm ones and a
-                    # warm-calibrated pin would mislabel a real warm
-                    # plan regression as a host burst
-                    "both_passes": _cold_time(n, cold, extra_passes)
-                    / cold_med
-                    > COLD_RATIO_BUDGETS[n] * mult,
-                }
-                for n, t in {**warm, **extra_passes[1]}.items()
-                if n in WARM_RATIO_BUDGETS
-                and t / warm_med > WARM_RATIO_BUDGETS[n] * mult
-            },
         },
         "sf": sf,
-        # regime self-description (r14): pins are calibrated at the
-        # ≥16-core regime and scaled by budget_mult below it — a reader
-        # of this file can re-derive every breach verdict
         "cpus": parallelism,
-        "budget_mult": mult,
     }
-    # datagen_2m_rows_mor adjudication (r14, VERDICT r13 #6): the one
-    # disk-bound pipeline entry cannot ride the query-median ratios (it
-    # is excluded from the denominator for exactly that reason), so its
-    # budget normalizes by the same-pass host_ref CPU constant instead —
-    # imperfect (disk time ÷ CPU reference) and therefore generously
-    # pinned, but it closes the one headline entry that could regress
-    # silently.  Pool: r12/r13 driver details + five r13 same-code runs
-    # (warm ratios 6.7-10.8 clean, 18.9 in one warm>cold stall window;
-    # cold 10.1-14.4).
-    dg_warm = warm.get("datagen_2m_rows_mor")
-    if dg_warm is not None and host_refs and host_refs[-1] > 0:
-        warm_hr = round(dg_warm / host_refs[-1], 2)
-        cold_hr = round(
-            cold.get("datagen_2m_rows_mor", 0.0) / max(host_refs[0], 1e-9), 2
-        )
-        detail["passes"]["datagen_hostref_ratio"] = {
-            "warm": warm_hr,
-            "cold": cold_hr,
-        }
-        if warm_hr > DATAGEN_HOSTREF_BUDGET["warm"]:
-            detail["passes"]["ratio_breaches"]["datagen_2m_rows_mor"] = {
-                "warm_hostref": warm_hr,
-                "cold_hostref": cold_hr,
-                "both_passes": cold_hr > DATAGEN_HOSTREF_BUDGET["cold"],
-            }
     if probe is not None:
         detail["probe_tier"] = probe
     detail_path = _detail_path()
@@ -508,94 +407,10 @@ def _emit_detail(
     print(f"detail: {os.path.relpath(detail_path, REPO)}")
 
 
-# the driver records only a 2,000-char tail of stdout and parses the last
-# line; BENCH_r11's 5.7 KB line clipped mid-JSON and the round lost its
-# official headline.  1,800 leaves slack for the driver's own framing.
+# only a 2,000-char tail of stdout is recorded and its last line parsed;
+# a longer line clips mid-JSON and the record is lost.  1,800 leaves
+# slack for the recorder's own framing.
 MAX_FINAL_LINE = 1800
-
-# Warm-ratio budgets (README "Performance notes"): each value bounds a
-# query's WARM time divided by the same run's query-only headline warm
-# median, so a host-wide slowdown moves numerator and denominator
-# together and a breach is a plan regression, not host drift.  Pins
-# are calibrated at >=16 cores; runs below LOW_CORE_REGIME_BELOW cores
-# multiply every pin by LOW_CORE_RATIO_MULT.  The calibration runs are
-# in the git history at commit e2f28d8.
-WARM_RATIO_BUDGETS = {
-    "q_bucketed_join": 4.8,
-    "q_ngram_jaccard_pairs": 3.8,
-    "q_mor_merge": 3.6,
-    "q_stream_tumbling": 3.6,
-    "q_column_profile": 3.3,
-    "q_mor_compaction_plan": 3.3,
-    "q_bpe_train": 3.1,
-    "q_bm25": 2.9,
-    "q_simhash": 2.7,
-    "q1_pricing_summary": 2.6,
-    "q_event_pagerank": 2.6,
-    "q_value_outliers_mad": 2.6,
-    "q_referential_integrity": 2.5,
-    "q_tfidf_top_terms": 2.3,
-    "q_jaccard_pairs": 2.1,
-    "q_dedup_survivors": 2.0,
-    "q_repetition_score": 1.9,
-    "q10_returned_items": 1.8,
-    "q3_shipping_priority": 1.7,
-    "q5_local_supplier_volume": 1.7,
-    "q_asof_join": 1.7,
-    "q_curriculum_order": 1.6,
-    "q_knn_classify": 1.6,
-    "q_minhash_lsh": 1.6,
-    "q_ann_bruteforce": 1.4,
-    "q_ann_recall": 1.4,
-    "q_ann_lsh": 1.1,
-    "q_dedup_incremental": 1.1,
-}
-
-# Cold-pass ratio pins (cold time over the same run's query-only cold
-# median) adjudicate `both_passes`: cold passes carry first-pass
-# artifact builds, so they are judged against their own band.  Same
-# keyset as WARM_RATIO_BUDGETS (test-asserted).
-COLD_RATIO_BUDGETS = {
-    "q3_shipping_priority": 2.5,
-    "q5_local_supplier_volume": 1.8,
-    "q_ann_bruteforce": 3.2,
-    "q_ann_lsh": 3.8,
-    "q_ann_recall": 2.1,
-    "q_knn_classify": 1.1,
-    "q_ngram_jaccard_pairs": 1.9,
-    "q_referential_integrity": 1.6,
-    "q_stream_tumbling": 2.3,
-    "q_bm25": 2.4,
-    "q_value_outliers_mad": 1.9,
-    "q_curriculum_order": 2.3,
-    "q_dedup_incremental": 2.4,
-    "q_mor_merge": 3.8,
-    "q_column_profile": 4.7,
-    "q_dedup_survivors": 6.5,
-    "q_asof_join": 1.9,
-    "q1_pricing_summary": 3.4,
-    "q_bucketed_join": 4.3,
-    "q_simhash": 4.2,
-    "q_jaccard_pairs": 3.9,
-    "q_event_pagerank": 4.1,
-    "q10_returned_items": 1.0,
-    "q_bpe_train": 4.4,
-    "q_mor_compaction_plan": 2.4,
-    "q_minhash_lsh": 4.8,
-    "q_tfidf_top_terms": 1.4,
-    "q_repetition_score": 1.0,
-}
-
-# datagen_2m_rows_mor is disk-bound and excluded from both medians; its
-# pins divide its seconds by the same pass's host_ref seconds instead.
-DATAGEN_HOSTREF_BUDGET = {"warm": 14.0, "cold": 19.0}
-
-LOW_CORE_REGIME_BELOW = 16
-LOW_CORE_RATIO_MULT = 1.4
-
-
-def _budget_mult(parallelism: int) -> float:
-    return 1.0 if parallelism >= LOW_CORE_REGIME_BELOW else LOW_CORE_RATIO_MULT
 
 
 def _median(xs: list[float]) -> float:
@@ -605,9 +420,8 @@ def _median(xs: list[float]) -> float:
 
 
 def _detail_path() -> str:
-    """Round-keyed side file: BENCH_r{N}.json for round N is written by
-    the driver AFTER bench runs, so the current round is one past the
-    highest recorded one (a fresh checkout writes r01)."""
+    """Side file keyed one past the highest recorded BENCH_r{N}.json,
+    which is written after bench runs (a fresh checkout writes r01)."""
     import glob
 
     rounds = [0]
@@ -625,11 +439,10 @@ def final_record(
     sf: float,
     warm_median: float | None = None,
 ) -> dict:
-    """The compact record the driver parses — the r10 shape plus one
-    float (``warm_median``, VERDICT r12 #3) so the official series is
-    host-normalizable from the parsed record alone.  This is the LAST
-    stdout line and must stay under MAX_FINAL_LINE (pinned by
-    tests/test_bench_contract.py)."""
+    """The compact record parsed from the LAST stdout line, plus one
+    float (``warm_median``) so the recorded series is host-normalizable
+    from the record alone.  It must stay under MAX_FINAL_LINE (pinned
+    by tests/test_bench_contract.py)."""
     record = {
         "metric": metric,
         "value": total,
@@ -645,10 +458,10 @@ def final_record(
 def render_final_line(record: dict) -> str:
     line = json.dumps(record)
     if len(line) >= MAX_FINAL_LINE:
-        # defense in depth: a clipped line loses the ROUND'S WHOLE
-        # headline (BENCH_r11), so if a future field/entry ever grows
-        # the record past the budget, drop the per-query map rather
-        # than lose `value` — the detail file still has everything
+        # defense in depth: a clipped line loses the whole record, so
+        # if a future field/entry ever grows it past the budget, drop
+        # the per-query map rather than lose `value` — the detail file
+        # still has everything
         slim = {k: v for k, v in record.items() if k != "queries"}
         line = json.dumps(slim)
     return line

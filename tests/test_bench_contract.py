@@ -1,14 +1,13 @@
-"""Pins the bench stdout contract (VERDICT r11 #1).
+"""Pins the bench stdout and detail-file contract.
 
-The round driver captures only a 2,000-char tail of bench.py's stdout and
-parses the LAST line as the round's official perf record.  Round 11's
-`passes` block grew that line to 5,722 bytes, the tail clipped it
-mid-JSON, and `BENCH_r11.json` recorded `parsed: null` — the round lost
-its headline number.  bench.py now prints a compact r10-shaped final
-line ({metric, value, unit, queries, sf}) and routes the detail (per-pass
-timings, extras, host_ref, warm ratios) to a round-keyed side file; these
-tests pin the final line under the budget so a future field addition
-cannot silently re-break the record.
+Only a 2,000-char tail of bench.py's stdout is recorded, and its LAST
+line is parsed as the run's record.  bench.py therefore prints a compact
+final line ({metric, value, unit, queries, sf, warm_median}) and routes
+the detail (per-pass timings, extras, host_ref, warm ratios, the probe
+tier) to a side file.  These tests pin the final line under the budget
+and the detail file's keys.  bench.py reports timings and does not judge
+them: plan regressions are caught by the executed-plan locks in
+tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -53,61 +52,6 @@ def test_final_record_carries_warm_median():
     assert "warm_median" not in fallback
 
 
-def test_cold_budgets_cover_exactly_the_warm_budget_entries():
-    """ADVICE r12: `both_passes` adjudicates the COLD ratio, and cold
-    passes systematically carry first-pass (cache/trainer) overhead —
-    so every budgeted entry needs its own cold pin, and an entry with
-    only one of the two tables is a half-adjudicated breach."""
-    assert set(bench.COLD_RATIO_BUDGETS) == set(bench.WARM_RATIO_BUDGETS)
-
-
-def _clean_window_ratio_medians() -> dict[str, float]:
-    """Per-entry median warm ratio across the recorded BENCH_DETAIL
-    files from CLEAN windows (empty ratio_breaches — the breach report
-    self-labels degraded hosts, and the coverage ratchet must not learn
-    ratios from a stall).  Falls back to all files if none are clean."""
-    import statistics
-
-    files = sorted(glob.glob(os.path.join(bench.REPO, "BENCH_DETAIL_r*.json")))
-    ratios: dict[str, list[float]] = {}
-    clean, dirty = [], []
-    for p in files:
-        try:
-            with open(p) as f:
-                passes = json.load(f)["passes"]
-        except (OSError, ValueError, KeyError):
-            continue
-        (clean if not passes.get("ratio_breaches") else dirty).append(passes)
-    for passes in clean or dirty:
-        for src in ("warm_ratio", "extra_warm_ratio"):
-            for n, r in passes.get(src, {}).items():
-                ratios.setdefault(n, []).append(r)
-    return {n: statistics.median(v) for n, v in ratios.items()}
-
-
-def test_every_heavy_live_entry_is_budgeted():
-    """The CONVERSE of test_ratio_budgets_cover_live_bench_entries
-    (VERDICT r12 #1): budgeted⇒live was asserted, but live-and-heavy⇒
-    budgeted was not — so the suite's two most expensive queries
-    (q_column_profile 3.49, q_dedup_survivors 3.40) could not raise a
-    breach at all.  Any live entry whose recorded clean-window ratio
-    median exceeds 1.3 must carry a pinned budget."""
-    live = set(bench.HEADLINE) | set(bench.EXTRA)
-    heavy = {
-        n: r
-        for n, r in _clean_window_ratio_medians().items()
-        if n in live and n != "datagen_2m_rows_mor" and r > 1.3
-    }
-    unbudgeted = {
-        n: r for n, r in heavy.items() if n not in bench.WARM_RATIO_BUDGETS
-    }
-    assert not unbudgeted, (
-        f"heavy entries with no pinned warm-ratio budget: {unbudgeted} — "
-        "pin max-of-clean-runs + ~30% in bench.WARM_RATIO_BUDGETS and "
-        "mirror COLD_RATIO_BUDGETS + the README table"
-    )
-
-
 def test_render_final_line_drops_queries_rather_than_clip():
     # a future bug that balloons the per-query map must degrade to a
     # still-parseable headline-only line, never an unparseable clip
@@ -140,41 +84,6 @@ def test_median_is_the_warm_ratio_denominator_shape():
     assert bench._median([1.2345678]) == 1.235
 
 
-def test_ratio_budgets_cover_live_bench_entries():
-    # a renamed/removed query must not leave a budget silently detached
-    live = set(bench.HEADLINE) | set(bench.EXTRA) | {"datagen_2m_rows_mor"}
-    dead = set(bench.WARM_RATIO_BUDGETS) - live
-    assert not dead, f"budgeted entries not benched: {sorted(dead)}"
-
-
-def test_readme_budget_table_matches_bench_budgets():
-    """The README ratio-budget table and bench.WARM_RATIO_BUDGETS must
-    agree — the README is the decision rule the judge reads, bench.py is
-    the one that executes (same one-source-of-truth pattern as the
-    NULL-program counts)."""
-    import re
-    from pathlib import Path
-
-    text = (Path(bench.REPO) / "README.md").read_text()
-    rows = re.findall(r"\| `(q[\w]+)` \| [\d.]+ \| ≤([\d.]+) \|", text)
-    table = {name: float(b) for name, b in rows}
-    assert table == bench.WARM_RATIO_BUDGETS, (
-        sorted(set(table) ^ set(bench.WARM_RATIO_BUDGETS)),
-        {k: (table.get(k), bench.WARM_RATIO_BUDGETS.get(k)) for k in table
-         if table.get(k) != bench.WARM_RATIO_BUDGETS.get(k)},
-    )
-    # the cold table rows render the pin as ≤cN.N — the 'c' keeps the
-    # warm regex above from swallowing them
-    cold_rows = re.findall(r"\| `(q[\w]+)` \| [\d.]+ \| ≤c([\d.]+) \|", text)
-    cold_table = {name: float(b) for name, b in cold_rows}
-    assert cold_table == bench.COLD_RATIO_BUDGETS, (
-        sorted(set(cold_table) ^ set(bench.COLD_RATIO_BUDGETS)),
-        {k: (cold_table.get(k), bench.COLD_RATIO_BUDGETS.get(k))
-         for k in cold_table
-         if cold_table.get(k) != bench.COLD_RATIO_BUDGETS.get(k)},
-    )
-
-
 def test_probe_tier_names_are_benched_queries():
     """The heavy probe tier (bench detail file) may only time entries
     the bench already runs — additions-only to the harness, and the
@@ -185,11 +94,40 @@ def test_probe_tier_names_are_benched_queries():
     assert bench.PROBE_FACTOR >= 2
 
 
-def test_datagen_hostref_budget_shape():
-    """datagen_2m_rows_mor's host_ref-normalized pins: cold carries
-    first-pass overhead so its pin must not be tighter than warm's."""
-    import bench
-
-    b = bench.DATAGEN_HOSTREF_BUDGET
-    assert set(b) == {"warm", "cold"}
-    assert b["cold"] >= b["warm"] > 0
+def test_emit_detail_writes_raw_timings_and_ratios(tmp_path, monkeypatch):
+    """The detail file carries the per-pass timings, their totals,
+    host_ref, the warm median and the warm ratios, and no verdict."""
+    path = tmp_path / "detail.json"
+    monkeypatch.setattr(bench, "_detail_path", lambda: str(path))
+    cold = {"q_a": 2.0, "q_b": 4.0, "q_c": 9.0, "datagen_2m_rows_mor": 30.0}
+    warm = {"q_a": 1.0, "q_b": 2.0, "q_c": 8.0, "datagen_2m_rows_mor": 20.0}
+    extra_passes = [{"q_x": 3.0}, {"q_x": 1.0}]
+    probe = {"factor": 10, "queries": {"q_a": {"cold": 5.0, "warm": 4.0}}}
+    bench._emit_detail(
+        cold, warm, {"q_x": 1.0}, extra_passes, [0.3, 0.4], 0.1, None, probe, 4
+    )
+    detail = json.loads(path.read_text())
+    assert set(detail) == {"extra_queries", "passes", "sf", "cpus", "probe_tier"}
+    assert detail["extra_queries"] == {"q_x": 1.0}
+    assert (detail["sf"], detail["cpus"]) == (0.1, 4)
+    assert detail["probe_tier"] == probe
+    passes = detail["passes"]
+    assert set(passes) == {
+        "cold", "warm", "cold_total", "warm_total", "extra_cold",
+        "extra_warm", "host_ref_sec", "warm_median_sec", "warm_ratio",
+        "extra_warm_ratio",
+    }
+    assert passes["cold"] == cold and passes["warm"] == warm
+    assert (passes["cold_total"], passes["warm_total"]) == (45.0, 31.0)
+    assert passes["extra_cold"] == {"q_x": 3.0}
+    assert passes["extra_warm"] == {"q_x": 1.0}
+    assert passes["host_ref_sec"] == [0.3, 0.4]
+    # the median leaves the disk-bound datagen entry out
+    assert passes["warm_median_sec"] == 2.0
+    assert passes["warm_ratio"] == {
+        "q_a": 0.5, "q_b": 1.0, "q_c": 4.0, "datagen_2m_rows_mor": 10.0
+    }
+    assert passes["extra_warm_ratio"] == {"q_x": 0.5}
+    # a failed probe tier leaves its block out
+    bench._emit_detail(cold, warm, {}, extra_passes, [0.3], 0.1, 2.0)
+    assert "probe_tier" not in json.loads(path.read_text())

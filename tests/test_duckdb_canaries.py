@@ -1,7 +1,7 @@
 """Canaries for the two DuckDB 1.0 wrong-results bugs (VERDICT r11 #3).
 
 Two reproduced DuckDB 1.0 bugs are worked around in this repo's oracles
-by SPELLING (README "Round-11 NULL-robustness program", family 3):
+by SPELLING (README "NULL-robustness rules", family 3):
 
   (a) a window sorting GROUP BY output whose input rows carry NULL
       group-key sources misplaces one peer group NONDETERMINISTICALLY
@@ -40,8 +40,8 @@ import pytest
 from tests.conftest import SF_DIR
 
 XPASS_MSG = (
-    "DuckDB 1.0 wrong-results bug (README 'Round-11 NULL-robustness "
-    "program' family 3) — an XPASS means the installed DuckDB fixed it: "
+    "DuckDB 1.0 wrong-results bug (README 'NULL-robustness rules' "
+    "family 3) — an XPASS means the installed DuckDB fixed it: "
     "re-evaluate the workaround spellings in q_revenue_mom_change / "
     "q_cumulative_order_volume and the CASE-WHEN sentinel idiom"
 )

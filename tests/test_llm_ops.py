@@ -402,17 +402,33 @@ def test_pq_recall_floor(spark):
     assert sum(recalls) / len(recalls) >= 0.4, recalls
 
 
-def test_observed_ingest_self_check(spark, monkeypatch):
-    """With SPARK_GRAFT_OBSERVE_CHECK set, q_observed_ingest cross-checks
-    its Observation metrics against an independent aggregate (the extra
-    scan is test-only; the production path is single-scan)."""
-    from iceberg_data_gen_spark.operators import QUERIES
+def _check_observed_ingest(spark, sf_dir: str) -> list:
+    """Run the observed ingest once and cross-check its metrics against
+    an independent aggregate: n_seen and chars_seen equal a plain count
+    and sum, and n_seen - n_rejected equals the rows kept."""
+    from pyspark.sql import functions as F
 
-    monkeypatch.setenv("SPARK_GRAFT_OBSERVE_CHECK", "1")
+    from iceberg_data_gen_spark.operators.common import docs_table
+    from iceberg_data_gen_spark.operators.extensibility import _observed_ingest
+
+    out, obs = _observed_ingest(spark, sf_dir)
+    rows = out.collect()
+    m = obs.get
+    expected = docs_table(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("c")
+    ).collect()[0]
+    assert (m["n_seen"], m["chars_seen"]) == (expected["n"], expected["c"]), m
+    assert m["n_seen"] - m["n_rejected"] == len(rows), (m, len(rows))
+    return rows
+
+
+def test_observed_ingest_self_check(spark):
+    """q_observed_ingest's Observation metrics agree with an
+    independent aggregate (the extra scan lives only here; the
+    operator itself reads the corpus once)."""
     from tests.conftest import SF_SMALL
 
-    out = QUERIES["q_observed_ingest"](spark, SF_SMALL)
-    assert out.count() > 0
+    assert len(_check_observed_ingest(spark, SF_SMALL)) > 0
 
 
 def test_pii_detection_on_injected_fixtures(spark):
@@ -1712,13 +1728,12 @@ def test_quality_score_empty_doc_matches_oracle(spark, tmp_path):
     assert empty[1] is None and empty[4] is None and empty[5] == "drop"
 
 
-def test_observed_ingest_check_survives_null_predicate_rows(spark, tmp_path, monkeypatch):
-    """Review r10: a row with NULL lang/n_chars is dropped by the keep
-    filter but (~keep) is NULL too, so it counted in n_seen and in
-    NEITHER bucket — the SPARK_GRAFT_OBSERVE_CHECK invariant raised on
-    correct output.  The coalesced rejected-counter must hold the
-    n_seen = n_rejected + n_kept identity with NULL-predicate rows
-    planted."""
+def test_observed_ingest_check_survives_null_predicate_rows(spark, tmp_path):
+    """A row with NULL lang/n_chars is dropped by the keep filter but
+    (~keep) is NULL too, so without the coalesce it counts in n_seen
+    and in NEITHER bucket, and the cross-check fails on correct output.
+    The coalesced rejected-counter must hold the n_seen = n_rejected +
+    n_kept identity with NULL-predicate rows planted."""
     sf_dir = str(tmp_path / "sf-obs-null")
     spark.createDataFrame(
         [
@@ -1728,6 +1743,5 @@ def test_observed_ingest_check_survives_null_predicate_rows(spark, tmp_path, mon
         ],
         "doc_id long, text string, source string, lang string, n_chars int",
     ).write.parquet(f"{sf_dir}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_OBSERVE_CHECK", "1")
-    rows = operators.QUERIES["q_observed_ingest"](spark, sf_dir).collect()
+    rows = _check_observed_ingest(spark, sf_dir)
     assert sorted(r.doc_id for r in rows) == [1]
